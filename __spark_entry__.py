@@ -5813,7 +5813,7 @@ wf AS (
 # byte-identical by construction, so an oracle tweak can never reach
 # one and not the other (r14 review).  Tokenizer matches
 # functions.textfns.tokens (trim + \\s+ split).
-_TEXT_LM_ORACLE = """
+_TEXT_LM_ORACLE = r"""
             WITH w AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS arr
                        FROM documents),
             uc AS (

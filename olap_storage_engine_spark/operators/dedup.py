@@ -30,30 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..functions.hashes import md5int
 from ..functions.textfns import tokens
 from ..functions.vectors import cosine
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure enough input partitions for per-row-heavy operators.
-
-    Small fixture files arrive as a single scan partition, serializing
-    the tokenize/explode work on one core; a cheap round-robin
-    repartition of the (narrow) source rows restores parallelism.  At
-    real scale inputs already have many partitions and this is a no-op.
-    """
-    sc = df.sparkSession.sparkContext
-    # the plan->RDD conversion is a driver-side analysis pass; memoize
-    # the partition count on the DataFrame object so repeated operator
-    # builds over the same (fixture-cached) source pay it once
-    cur = getattr(df, "_olap_nparts", None)
-    if cur is None:
-        cur = df.rdd.getNumPartitions()
-        try:
-            df._olap_nparts = cur
-        except AttributeError:
-            pass
-    if cur < sc.defaultParallelism // 2:
-        return df.repartition(sc.defaultParallelism)
-    return df
+from .spread import spread
 
 
 def sha_dedup(
@@ -131,7 +108,7 @@ def shingles(
     # directly inside the transform lambda would re-run the regex split
     # per shingle (~100x per row) — the projection boundary below keeps
     # it a single split per document.
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
     grams = gram_array(F.col("__toks"), n)
@@ -170,7 +147,7 @@ def shingle_tf(
     materialize the RAW gram array, one combine-enabled groupBy for
     the counts.  The groupBy is the only shuffle and runs at
     PUBLISH time, inside the index build, never per query."""
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
     g = toked.select(
@@ -403,7 +380,7 @@ def simhash(
     expresses the semantics but measurably underperforms the
     vectorized kernel, and the hash inputs stay JVM-side so the Arrow
     transfer is one long-array column, not text."""
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col),
         F.array_distinct(tokens(F.col(text_col))).alias("__toks"),
     )
@@ -944,7 +921,7 @@ def embedding_neardup_pairs(
     # evaluates its expressions O(bucket^2) times — same economics as
     # semantic_dedup_pairs); dot stays the sequential fold so the
     # unrounded threshold cut is bit-identical to the oracle's.
-    bucketed = embeddings.select(
+    bucketed = spread(embeddings).select(
         F.col(id_col),
         F.col(vec_col),
         lsh_bucket_col(vec_col, num_planes, dim).alias("bucket"),

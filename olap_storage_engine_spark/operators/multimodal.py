@@ -33,6 +33,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 
+from .spread import spread
+
 
 def attach_binary_payload(
     docs: DataFrame, text_col: str = "text", modality: str = "text"
@@ -161,11 +163,9 @@ def attach_image_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             out["img_h"] = hs
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def bmp_stats(buf: bytes):
@@ -250,9 +250,7 @@ def _fused_codec_features(
                 out[c] = out[c].astype("int32")
             yield out
 
-    from .dedup import _spread
-
-    return _spread(docs.select(id_col)).mapInPandas(fused, schema=schema)
+    return spread(docs.select(id_col)).mapInPandas(fused, schema=schema)
 
 
 def decode_bmp_features(
@@ -306,9 +304,7 @@ def attach_and_decode_bmp_features(
             ]
             yield _bmp_feature_frame(decoded, pdf[id_col], id_col)
 
-    from .dedup import _spread
-
-    return _spread(docs.select(id_col)).mapInPandas(
+    return spread(docs.select(id_col)).mapInPandas(
         attach_decode, schema=schema
     )
 
@@ -495,11 +491,9 @@ def attach_png_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def _png_payload(i: int) -> bytes:
@@ -663,11 +657,9 @@ def attach_audio_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def _wav_payload(i: int) -> bytes:
@@ -843,11 +835,9 @@ def attach_jpeg_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def _jpeg_payload(i: int) -> bytes:
@@ -1055,11 +1045,9 @@ def attach_video_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def frame_sample_features(
@@ -1150,11 +1138,9 @@ def attach_avi_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
     # per-row encode/decode work: restore parallelism when the fixture
     # arrives as a single scan partition (no-op at real scale)
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def _avi_payload(i: int) -> bytes:
@@ -1302,9 +1288,7 @@ def attach_gif_payload(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             )
             yield out
 
-    from .dedup import _spread
-
-    return _spread(docs).mapInPandas(attach, schema=schema)
+    return spread(docs).mapInPandas(attach, schema=schema)
 
 
 def _gif_payload(i: int) -> bytes:

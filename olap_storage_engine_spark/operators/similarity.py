@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from ..functions.vectors import cosine, dot, l2norm
 from .dedup import lsh_bucket_col
+from .spread import spread
 
 
 # The k the recall evaluation is DEFINED at: the persisted exact
@@ -64,7 +65,9 @@ def brute_topk(
     p = probes.select(
         F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
     )
-    joined = corpus.join(F.broadcast(p), F.col(id_col) != F.col("probe_id"))
+    joined = spread(corpus).join(
+        F.broadcast(p), F.col(id_col) != F.col("probe_id")
+    )
     scored = joined.select(
         "probe_id",
         F.col(id_col),
@@ -122,7 +125,7 @@ def lsh_topk(
             ).alias("bucket"),
         )
 
-    c = table_keys(corpus, [id_col, vec_col], vec_col)
+    c = table_keys(spread(corpus), [id_col, vec_col], vec_col)
     p = table_keys(
         probes.select(
             F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
@@ -957,18 +960,16 @@ def embedding_diversity(
     Returns (group_col, n, mean_pair_cos) for groups with n >= 2,
     mean_pair_cos in [-1/(n-1), 1].
     """
-    from .dedup import _spread
-
     # The norm is computed ONCE per row in the pre-explode projection
     # and replicated by Generate; the division happens per exploded
     # element.  Do NOT move the division into a transform() lambda
     # that captures the norm expression: higher-order lambdas are
     # interpreted with no common-subexpression elimination, so the
     # O(dim) norm fold would re-run per ELEMENT — O(dim^2) per row
-    # (measured 7.6 s -> sub-second at sf1 for dim=64).  _spread
+    # (measured 7.6 s -> sub-second at sf1 for dim=64).  spread
     # restores parallelism when a small fixture file arrives as one
     # scan split (no-op at real scale).
-    dims = _spread(corpus).select(
+    dims = spread(corpus).select(
         F.col(group_col),
         l2norm(F.col(vec_col)).alias("__nrm"),
         F.posexplode(F.col(vec_col)).alias("pos", "val"),
@@ -1217,7 +1218,7 @@ def hard_negatives(
         F.col(vec_col).alias("probe_vec"),
         F.col(label_col).alias("probe_label"),
     )
-    joined = corpus.join(
+    joined = spread(corpus).join(
         F.broadcast(p),
         (F.col(id_col) != F.col("probe_id"))
         & (F.col(label_col) != F.col("probe_label")),

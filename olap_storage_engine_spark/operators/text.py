@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..functions.hashes import rolling_fingerprint
 from ..functions.textfns import regex_token_count, simple_token_count, tokens
+from .spread import spread
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic.  Deliberately small and public-knowledge (top function
@@ -50,18 +51,6 @@ def text_stats(docs: DataFrame) -> DataFrame:
     )
 
 
-def lang_scores(text: F.Column) -> dict[str, F.Column]:
-    """Stopword-hit count per language over the token array."""
-    toks = tokens(text)
-    out = {}
-    for lang, words in STOPWORDS.items():
-        arr = F.array(*[F.lit(w) for w in words])
-        out[lang] = F.size(
-            F.filter(toks, lambda t: F.array_contains(arr, t))
-        )
-    return out
-
-
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Heuristic language ID: argmax of stopword hits; 'und'
     (undetermined) when no stopword matches.  Ties break by language
@@ -73,7 +62,7 @@ def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     columns (inlining the score expressions would re-scan the token
     array ~7x per language)."""
     langs = sorted(STOPWORDS)
-    toked = docs.select("*", tokens(F.col(text_col)).alias("__toks"))
+    toked = spread(docs).select("*", tokens(F.col(text_col)).alias("__toks"))
 
     def _hits(lg):
         arr = F.array(*[F.lit(w) for w in STOPWORDS[lg]])
@@ -103,7 +92,7 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
     # stage the expensive per-row features once, then derive the score
     # from attribute references (one regex pass, one token-array scan)
-    feats = docs.select(
+    feats = spread(docs).select(
         "*",
         F.length(t).alias("__n_chars"),
         simple_token_count(t).alias("n_tokens"),
@@ -169,13 +158,11 @@ def repetition_stats(
     Returns (doc_id, n_tokens, distinct_ratio, top_token_frac,
     dup_2gram_frac), ratios rounded to 4dp.
     """
-    from .dedup import _spread
-
     # per-row interpreted array folds are CPU-bound at ~MB/s per core:
     # a small fixture file arriving as 1-2 scan splits would serialize
-    # the whole corpus on 2 of 32 cores (_spread is a no-op at real
+    # the whole corpus on 2 of 32 cores (spread is a no-op at real
     # scale, where inputs already have many splits)
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
     toks = F.col("__toks")
@@ -247,7 +234,7 @@ def quality_filter(
     Returns (doc_id, lang, n_tokens, keep, reason).
     """
     langs = sorted(STOPWORDS)
-    toked = docs.select(
+    toked = spread(docs).select(
         F.col(id_col),
         F.col(lang_col),
         tokens(F.col(text_col)).alias("__toks"),
@@ -396,6 +383,7 @@ def token_budget_select(
 
 def fingerprints(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Order-sensitive rolling-hash fingerprint per document."""
+    docs = spread(docs)
     cols = [docs[c] for c in docs.columns]
     return docs.select(
         *cols,
@@ -418,7 +406,7 @@ def chunk_documents(
     offsets with ``sequence``, build every chunk inside one
     ``transform`` (slice + join), explode.  No UDF, no shuffle — the
     fan-out is per-row and bounded by ceil(n_tokens / stride)."""
-    toked = docs.select(
+    toked = spread(docs).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
     toks = F.col("__toks")
@@ -531,7 +519,7 @@ def enrich(docs: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     langs = sorted(STOPWORDS)
     all_stop = F.array(*[F.lit(w) for ws in STOPWORDS.values() for w in ws])
-    toked = docs.select("*", tokens(t).alias("__toks"))
+    toked = spread(docs).select("*", tokens(t).alias("__toks"))
 
     def _hits(lg):
         arr = F.array(*[F.lit(w) for w in STOPWORDS[lg]])
@@ -716,7 +704,7 @@ def bm25_rank_from_index(
     # dl and the |Q| term frequencies in ONE pass: a conditional sum
     # per query term pivots the posting rows row-locally before the
     # combine — a term absent from a doc aggregates to NULL.
-    # (No _spread here: the map side is already a combine-enabled
+    # (No spread here: the map side is already a combine-enabled
     # aggregate of narrow rows — a round-robin repartition would
     # shuffle the whole partition to parallelize work cheaper than
     # the shuffle itself; measured slower at fixture scale.)
@@ -1042,9 +1030,9 @@ def dsir_gram_features(
     et al. 2023 with the hash left off (grams join by value, so the
     DuckDB oracle needs no hash replication; at 100 TB swap the join
     key for xxhash64(gram) — same plan shape, smaller shuffle)."""
-    from .dedup import gram_array, _spread
+    from .dedup import gram_array
 
-    toked = _spread(docs).select(
+    toked = spread(docs).select(
         F.col(id_col), tokens(F.col(text_col)).alias("__toks")
     )
     grams = F.array_union(
@@ -2107,7 +2095,7 @@ def bpe_encode(
             F.lit(_BPE_L + a + b + _BPE_R),
         )
     per_word = (
-        docs.select(
+        spread(docs).select(
             F.col(id_col),
             F.posexplode(F.split(F.col(text_col), " ")).alias("pos", "w"),
         )
@@ -2151,7 +2139,7 @@ def bpe_encode_corpus(
     the cross-engine hash depend on list formatting).
     """
     toks = _bpe_token_array(F.col(text_col), merges)
-    return docs.filter(F.length(text_col) > 0).select(
+    return spread(docs).filter(F.length(text_col) > 0).select(
         F.col(id_col),
         F.size(toks).cast("int").alias("n_tokens"),
         F.array_join(toks, "\x1f").alias("token_str"),
@@ -2198,7 +2186,7 @@ def bpe_compression_stats(
     to 6dp (exact-integer ratios — engine-stable).
     """
     toks = _bpe_token_array(F.col(text_col), merges)
-    per_doc = docs.filter(F.length(text_col) > 0).select(
+    per_doc = spread(docs).filter(F.length(text_col) > 0).select(
         F.col(group_col),
         F.octet_length(text_col).alias("__b"),
         F.length(text_col).alias("__c"),

@@ -230,12 +230,23 @@ class OlapTable:
             if self.spec.bucket.btype == BucketType.HASH
             else None
         )
-        if self.spec.partition.ptype != PartitionType.UNPARTITIONED or (
-            shuffle_parts and shuffle_parts > 1
-        ):
+        unpartitioned = self.spec.partition.ptype == PartitionType.UNPARTITIONED
+        if not unpartitioned or (shuffle_parts and shuffle_parts > 1):
             # one task per (partition, bucket) directory target
             routed = routed.repartition(F.col(PT_COL), F.col(BK_COL))
-        sorted_df = routed.sortWithinPartitions(*keys)
+        # Spark's planned write puts its own Sort(__pt, __bk) above this
+        # one unless this one already leads with those columns, and the
+        # optimizer then drops this one: files would keep input order.
+        # An UNPARTITIONED label is a literal that folds out of the sort
+        # order before the write matches it, so it is attached after.
+        if unpartitioned:
+            sorted_df = (
+                routed.drop(PT_COL)
+                .sortWithinPartitions(BK_COL, *keys)
+                .withColumn(PT_COL, partition_label_col(self.spec.partition))
+            )
+        else:
+            sorted_df = routed.sortWithinPartitions(PT_COL, BK_COL, *keys)
 
         writer = (
             sorted_df.write.mode("errorifexists")
@@ -248,9 +259,14 @@ class OlapTable:
             .option("compression", self.spec.compression)
         )
         if keys:
-            writer = writer.option(
-                f"parquet.bloom.filter.enabled#{keys[0]}", "true"
-            ).option("parquet.bloom.filter.max.bytes", 64 * 1024)
+            # adaptive: parquet-mr sizes each file's filter to the
+            # distinct values it saw (capped at max.bytes) instead of
+            # writing the full 64 KB into every small (__pt, __bk) file
+            writer = (
+                writer.option(f"parquet.bloom.filter.enabled#{keys[0]}", "true")
+                .option("parquet.bloom.filter.adaptive.enabled", "true")
+                .option("parquet.bloom.filter.max.bytes", 64 * 1024)
+            )
         # per-column encoding hints (reference: src/field_type.rs:77-92
         # auto-selection; Parquet owns the actual codecs)
         for c in self.spec.columns:

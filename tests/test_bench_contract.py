@@ -32,8 +32,12 @@ def test_bench_stdout_last_line_is_headline_first_json(tmp_path):
     detail = tmp_path / "detail.json"
     regress = tmp_path / "regressions.md"
     env = dict(os.environ)
+    # explicit, so the cpus stamp is checked against a known count, not
+    # against the same fallback default the bench itself would use
+    cpus = 2
     env.update(
         {
+            "SPARK_GRAFT_CPUS": str(cpus),
             "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
             "SPARK_GRAFT_BENCH_ONLY": r"^(scan_count|table_stats)$",
             "SPARK_GRAFT_BENCH_ORACLE": "0",
@@ -74,7 +78,7 @@ def test_bench_stdout_last_line_is_headline_first_json(tmp_path):
     assert out["unit"] == "sec"
     assert out["sf"] == 0.001
     assert out["sf_dir"] == "/root/testdata/sf0.001"
-    assert out["cpus"] == int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    assert out["cpus"] == cpus
     assert set(out["queries"]) == {"scan_count", "table_stats"}
     assert out["n_queries"] == 2
     assert abs(out["value"] - sum(out["queries"].values())) < 1e-6

@@ -33,6 +33,9 @@ def main() -> None:
     )
     os.makedirs(outdir, exist_ok=True)
     for name in names:
+        # a query may persist frames; a later query's plan would then
+        # show an InMemoryTableScan that a fresh process never sees
+        spark.catalog.clearCache()
         df = qs[name](spark, SF_DIR)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
