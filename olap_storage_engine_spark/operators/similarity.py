@@ -1000,8 +1000,6 @@ def ann_recall(
     exact: DataFrame,
     approx: DataFrame,
     id_cols=("probe_id", "vec_id"),
-    approx_distinct: bool = False,
-    broadcast_approx: bool = False,
 ) -> DataFrame:
     """Index-quality EVALUATION: recall@k of an approximate top-k
     result against the exact brute-force top-k — the metric every ANN
@@ -1021,28 +1019,13 @@ def ann_recall(
     on (probe_id, vec_id) before the join — a candidate list that
     repeats a pair (legal for some LSH band unions) must count one
     hit, not several, or recall could exceed 1.0.
-
-    Serving knobs (r15 / VERDICT r14 task 4 — the default shape paid
-    a full sort-merge lifecycle for a k-rows-per-probe comparison):
-
-    - ``approx_distinct=True``: the caller asserts the approx ranking
-      is already unique on (probe_id, vec_id), skipping the dedup
-      exchange.  True by construction for the IVF serve (each corpus
-      vector lives in exactly ONE cell — see rank_cell_candidates);
-      NOT true for LSH band unions, hence opt-in.
-    - ``broadcast_approx=True``: the approx side is k·n_probes rows by
-      contract — broadcast it so the truth table is never shuffled for
-      the join (BroadcastHashJoin LeftOuter, build right); the only
-      remaining exchange is the per-probe aggregate.  Identical
-      results — both knobs change plan shape only.
     """
     pid, vid = id_cols
-    a = approx.select(pid, vid)
-    if not approx_distinct:
-        a = a.dropDuplicates([pid, vid])
-    a = a.select(pid, vid, F.lit(1).alias("__hit"))
-    if broadcast_approx:
-        a = F.broadcast(a)
+    a = (
+        approx.select(pid, vid)
+        .dropDuplicates([pid, vid])
+        .select(pid, vid, F.lit(1).alias("__hit"))
+    )
     return (
         exact.select(pid, vid)
         .join(a, [pid, vid], "left")

@@ -771,27 +771,9 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# every q_<name> builder above, declared once by its name
 TPCH_QUERIES = {
-    "tpch_q2": q_tpch_q2,
-    "tpch_q4": q_tpch_q4,
-    "tpch_q6": q_tpch_q6,
-    "tpch_q7": q_tpch_q7,
-    "tpch_q7_bucketed": q_tpch_q7_bucketed,
-    "tpch_q8": q_tpch_q8,
-    "tpch_q9": q_tpch_q9,
-    "tpch_q10": q_tpch_q10,
-    "tpch_q11": q_tpch_q11,
-    "tpch_q12": q_tpch_q12,
-    "tpch_q13": q_tpch_q13,
-    "tpch_q14": q_tpch_q14,
-    "tpch_q15": q_tpch_q15,
-    "tpch_q16": q_tpch_q16,
-    "tpch_q17": q_tpch_q17,
-    "tpch_q19": q_tpch_q19,
-    "tpch_q20": q_tpch_q20,
-    "tpch_q21": q_tpch_q21,
-    "tpch_q21_bucketed": q_tpch_q21_bucketed,
-    "tpch_q22": q_tpch_q22,
+    n[2:]: fn for n, fn in list(globals().items()) if n.startswith("q_")
 }
 
 

@@ -17,7 +17,9 @@ oracle pass) and pins:
 It also pins the regression gate's cross-config refusal: a detail file
 stamped with a different core count must produce a SKIPPED report, not
 per-query flags (the r14 driver's local[8] scaling run wrote four
-spurious flags against the local[32] detail).
+spurious flags against the local[32] detail), while the same data dir
+spelled differently must still diff.  And it pins bench.time_query's
+build/exec job split, which tools/quiet_bench.py reports.
 """
 
 import json
@@ -112,3 +114,36 @@ def test_bench_stdout_last_line_is_headline_first_json(tmp_path):
     report = regress.read_text()
     assert "SKIPPED: cross-config diff refused" in report
     assert "| scan_count |" not in report and "| table_stats |" not in report
+
+    # the same data dir spelled with a trailing slash is the same
+    # config: the gate compares realpaths and diffs
+    disk["cpus"] = out["cpus"]
+    disk["sf_dir"] = out["sf_dir"] + "/"
+    with open(detail, "w") as f:
+        json.dump(disk, f)
+    benchmod._emit_regressions(str(detail), out, report_path=str(regress))
+    report = regress.read_text()
+    assert "SKIPPED" not in report
+    assert "shared queries: 2" in report
+
+
+def test_time_query_splits_jobs_by_phase(spark):
+    """bench.time_query charges a builder's own driver-side jobs to
+    build_jobs and the noop-sink write to exec_jobs."""
+    sys.path.insert(0, REPO)
+    import bench as benchmod
+
+    def eager(spark, sf_dir):
+        n = len(spark.range(10).collect())  # a job while building
+        return spark.range(n)
+
+    def pure(spark, sf_dir):
+        return spark.range(10)
+
+    e = benchmod.time_query(spark, eager, "/unused")
+    p = benchmod.time_query(spark, pure, "/unused")
+    assert e["build_jobs"] >= 1
+    assert p["build_jobs"] == 0
+    assert e["exec_jobs"] >= 1 and p["exec_jobs"] >= 1
+    for r in (e, p):
+        assert r["build_s"] >= 0 and r["exec_s"] > 0

@@ -53,20 +53,13 @@ def canon_rows(cols, rows):
 
 
 def compare_query(spark, name: str, sf_dir: str, queries, oracles):
-    import duckdb
+    from bench import connect_with_views
 
     sdf = queries[name](spark, sf_dir)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
+    con = connect_with_views(sf_dir)
     sql = oracles.get(name)
     if sql is None:
         return {
@@ -103,7 +96,9 @@ def compare_query(spark, name: str, sf_dir: str, queries, oracles):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(
+        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    )
     import __spark_entry__ as e
     from olap_storage_engine_spark import get_spark
 
