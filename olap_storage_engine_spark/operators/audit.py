@@ -103,6 +103,6 @@ def write_audit_publish(
         table.commit(rs.rowset_id)
     else:
         table.manifest.with_retry(
-            lambda m: m.mark_stale(rs.rowset_id, reason="discarded")
+            lambda m: m.mark_stale([rs.rowset_id], reason="discarded")
         )
     return ok, rs.rowset_id, report

@@ -26,8 +26,7 @@ from pyspark.sql import functions as F
 
 from ..plans.manifest import RowsetState
 from ..spec import PartitionType
-from ..table import BK_COL, PT_COL, OlapTable
-from .keys_model import collapse
+from ..table import PT_COL, OlapTable
 from .routing import partition_label_col
 
 DEFAULT_CANDIDATES = 10  # reference: src/storage.rs:96
@@ -57,55 +56,46 @@ def schedule_compaction(
 
 
 def compact(table: OlapTable, lo: int = 0, hi: int | None = None) -> None:
-    """Rewrite the version cover [lo, hi] into one rowset.
+    """Rewrite the snapshot [lo, hi] into one rowset.
 
-    Reads the cover, applies the keys-model collapse physically, writes
-    a single new rowset spanning the merged interval (flagged
-    ``collapsed`` so steady-state reads skip merge-on-read), then marks
-    the old cover STALE (reference: src/tablet.rs:155-165).  Query
-    results are invariant under compaction — pinned by tests.
+    A rowset cannot be split, so [lo, hi] first shrinks until no
+    visible rowset straddles either end: a DML rewrite starts at
+    version 0, so a cumulative compaction that follows one stops above
+    it and base compaction folds it later.  Then the plan is read, the
+    keys-model collapse applied physically, a single new rowset
+    written over the interval (flagged ``collapsed`` so steady-state
+    reads skip merge-on-read), and every visible rowset inside the
+    interval retired in one manifest save (reference:
+    src/tablet.rs:155-165) — scoped ones included, so per-partition
+    chains fold back into one global rowset.  Query results are
+    invariant under compaction — pinned by tests.
     """
     if hi is None:
         hi = table.manifest.max_version
-    if table.manifest.has_scoped_rowsets():
-        # partition-scoped DML left per-partition version chains;
-        # compaction folds everything back into ONE global rowset and
-        # retires every rowset inside [lo, hi] (scoped or not).
-        covered = [
-            rs
-            for rs in table.manifest.visible_rowsets()
-            if lo <= rs.start_version and rs.end_version <= hi
-        ]
-        if len(covered) <= 1:
-            return
-        merged = table.read(lo, hi)
-        # rewrite of already-ingested rows: unrouted rows were admitted
-        # at ingest (strict_routing=False) and must survive compaction
-        table.write(
-            merged,
-            start_version=lo,
-            end_version=hi,
-            collapsed=True,
-            strict_routing=False,
-        )
-        for rs in covered:
-            table.manifest.mark_stale(rs.rowset_id)
-        return
-    cover = table.manifest.capture_consistent_versions(lo, hi)
-    if len(cover) <= 1:
+    visible = table.manifest.visible_rowsets()
+    moved = True
+    while moved and lo <= hi:
+        moved = False
+        for rs in visible:
+            if rs.start_version < lo <= rs.end_version:
+                lo, moved = rs.end_version + 1, True
+            if rs.start_version <= hi < rs.end_version:
+                hi, moved = rs.start_version - 1, True
+    covered = [
+        rs.rowset_id
+        for rs in visible
+        if lo <= rs.start_version and rs.end_version <= hi
+    ]
+    if len(covered) <= 1:
         return  # nothing to merge
-    merged = table.read(lo, hi)
-    # The collapsed result is version-stamped at `hi` on write; the new
-    # rowset covers [lo, hi] so existing snapshots keep resolving.
     table.write(
-        merged,
+        table.read(lo, hi),
         start_version=lo,
         end_version=hi,
         collapsed=True,
         strict_routing=False,  # rewrite: unrouted ingested rows survive
     )
-    for rs in cover:
-        table.manifest.mark_stale(rs.rowset_id)
+    table.manifest.mark_stale(covered)
 
 
 def repartition_table(
@@ -140,11 +130,7 @@ def repartition_table(
     if new_partition is None and new_bucket is None:
         return
     hi = table.manifest.max_version
-    covered = [
-        rs
-        for rs in table.manifest.visible_rowsets()
-        if rs.end_version <= hi
-    ]
+    covered = [rs.rowset_id for rs in table.manifest.visible_rowsets()]
     if not covered:  # empty table: the swap alone reorganizes nothing
         if new_partition is not None:
             table.spec.partition = new_partition
@@ -181,8 +167,7 @@ def repartition_table(
         collapsed=True,
         strict_routing=False,  # rewrite of already-ingested rows
     )
-    for rs in covered:
-        table.manifest.mark_stale(rs.rowset_id)
+    table.manifest.mark_stale(covered)
 
 
 def compact_partitions(
@@ -214,28 +199,22 @@ def compact_partitions(
     if hi is None:
         hi = table.manifest.max_version
     covered = [
-        rs
+        rs.rowset_id
         for rs in table.manifest.visible_rowsets()
         if rs.partitions
         and set(rs.partitions) <= set(labels)
         and lo <= rs.start_version
         and rs.end_version <= hi
     ]
-    df = table.scan(lo, hi, with_hidden=True).filter(
-        F.col(PT_COL).isin(list(labels))
-    )
-    drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-    merged = collapse(df.drop(*drop), table.spec)
     table.write(
-        merged,
+        table._collapsed(lo, hi, where=_in_labels(labels)),
         start_version=lo,
         end_version=hi,
         collapsed=True,
         partitions=list(labels),
         strict_routing=False,  # rewrite: unrouted ingested rows survive
     )
-    for rs in covered:
-        table.manifest.mark_stale(rs.rowset_id)
+    table.manifest.mark_stale(covered)
 
 
 def partition_compaction_scores(table: OlapTable) -> dict[str, int]:
@@ -325,16 +304,17 @@ def garbage_collect(
     ``min_retained_version`` is the retention window (VERDICT r7 #5):
     every snapshot read ``read(0, v)`` with
     ``v >= min_retained_version`` keeps working after GC — the exact
-    rowset covers those reads resolve through (the time-travel graph:
-    VISIBLE + compaction-retired STALE) are computed per retained
-    version and their members survive; everything outside every
-    retained cover is reclaimed.  ``None`` (the default) retains
+    read plans those reads resolve (``Manifest.capture_scoped_plan``,
+    over VISIBLE + compaction-retired STALE rowsets) are computed per
+    retained version and their members survive; everything outside
+    every retained plan is reclaimed.  ``None`` (the default) retains
     nothing — head-only, today's behavior.  Rollback-discarded rowsets
     are logically deleted history and are always reclaimable.
 
     Partition-scoped retired rowsets are retained conservatively while
-    a retention window is set (their per-label chains aren't resolved
-    by the global cover walk); they reclaim on the next head-only GC.
+    a retention window is set (no read plan serves them: historical
+    reads through a scoped epoch are out of time-travel reach); they
+    reclaim on the next head-only GC.
 
     Reclaimed rowsets are flagged in the manifest (one CAS save), so a
     later time-travel read past the window fails with a clean
@@ -343,29 +323,33 @@ def garbage_collect(
     import shutil
     import time
 
-    from ..plans.manifest import VersionGraph
+    from ..plans.manifest import VersionGraphError
 
     if now is None:
         now = time.time()
-    for rs in table.manifest.rowsets():
-        if (
-            rs.state == RowsetState.PREPARED
-            and prepared_ttl_sec is not None
-            and now - rs.created_at > prepared_ttl_sec
-        ):
-            table.manifest.mark_stale(rs.rowset_id, reason="discarded")
+    if prepared_ttl_sec is not None:
+        table.manifest.mark_stale(
+            [
+                rs.rowset_id
+                for rs in table.manifest.rowsets()
+                if rs.state == RowsetState.PREPARED
+                and now - rs.created_at > prepared_ttl_sec
+            ],
+            reason="discarded",
+        )
 
     rowsets = table.manifest.rowsets()
     needed: set[int] = set()
     if min_retained_version is not None:
-        graph = VersionGraph(rowsets, include_retired=True)
         lo_v = max(0, min_retained_version)
         for v in range(lo_v, table.manifest.max_version + 1):
-            cover = graph.find_covering_path(0, v)
-            if cover:
-                needed |= {r.rowset_id for r in cover}
-        # scoped chains aren't walked by the global graph — keep every
-        # unreclaimed retired scoped rowset while retention is active
+            try:
+                plan = table.manifest.capture_scoped_plan(0, v)
+            except VersionGraphError:
+                continue  # already out of time-travel reach
+            needed |= {rs.rowset_id for rs, _, _ in plan}
+        # keep every unreclaimed retired scoped rowset while retention
+        # is active
         needed |= {
             rs.rowset_id
             for rs in rowsets
@@ -451,43 +435,37 @@ def merge_into(
     by tests/test_partition_scoped_dml.py).  A one-key upsert on a
     100 TB table therefore costs one partition, not the table — the
     reference's per-tablet rowset granularity (src/meta.rs:90-121).
-    UNPARTITIONED tables are one partition by definition and take the
-    full rewrite.
+    UNPARTITIONED tables are one partition by definition, and a
+    mixed-layout cover cannot take label scopes (see delete_where):
+    both take the same rewrite with no scope, over the whole table.
 
     Returns the published RowsetMeta of the merged rowset.
     """
     if key_cols is None:
         key_cols = table.spec.key_names()
     hi = table.manifest.max_version
-    cols = table.spec.column_names()
-    src = source.select(*cols)
+    src = source.select(*table.spec.column_names())
     policy = table.spec.partition
-    # mixed-layout covers take the global path — see delete_where
-    if (policy.ptype == PartitionType.UNPARTITIONED
-            or table.has_mixed_layout(0, hi)):
-        current = table.read(0, hi)
-        remaining = current.join(
-            src.select(*key_cols), on=key_cols, how="anti"
+    labels = None
+    if policy.ptype != PartitionType.UNPARTITIONED:
+        labels = sorted(
+            r[0]
+            for r in src.select(partition_label_col(policy).alias("__l"))
+            .distinct()
+            .collect()
         )
-        merged = remaining.unionByName(src)
-        return table.write(
-            merged, start_version=0, end_version=hi + 1, collapsed=True
-        )
-    labels = sorted(
-        r[0]
-        for r in src.select(partition_label_col(policy).alias("__l"))
-        .distinct()
-        .collect()
-    )
-    if strict_routing and "__unrouted__" in labels:
-        # fail BEFORE any rewrite, mirroring write()'s ingest contract
-        # (the late in-write check would raise after the scan work)
-        raise ValueError(
-            f"{table.spec.name}: MERGE source rows route to no "
-            "partition; pass strict_routing=False to merge them into "
-            "the __unrouted__ partition"
-        )
-    current = _read_partitions(table, hi, labels)
+        if strict_routing and "__unrouted__" in labels:
+            # fail BEFORE any rewrite, mirroring write()'s ingest
+            # contract (the late in-write check would raise after the
+            # scan work)
+            raise ValueError(
+                f"{table.spec.name}: MERGE source rows route to no "
+                "partition; pass strict_routing=False to merge them into "
+                "the __unrouted__ partition"
+            )
+        if table.has_mixed_layout(0, hi):
+            labels = None
+    current = table._collapsed(0, hi, where=_in_labels(labels))
     remaining = current.join(src.select(*key_cols), on=key_cols, how="anti")
     merged = remaining.unionByName(src)
     # strict_routing=False on the WRITE regardless: source routability
@@ -733,52 +711,39 @@ def delete_where(table: OlapTable, predicate) -> int:
     hi = table.manifest.max_version
     policy = table.spec.partition
     is_true = predicate.eqNullSafe(F.lit(True))
-    # a mixed-layout cover (mid-reorg crash or pre-reorg time travel)
-    # cannot take the label-scoped path: old directories carry old
-    # labels and the per-label chains would mask the wrong rowsets —
-    # the global rewrite is layout-agnostic and always sound
-    if (policy.ptype == PartitionType.UNPARTITIONED
-            or table.has_mixed_layout(0, hi)):
-        current = table.read(0, hi)
-        n_before = current.count()
-        remaining = current.filter(~is_true)
-        rs = table.write(
-            remaining,
-            start_version=0,
-            end_version=hi + 1,
-            collapsed=True,
-            strict_routing=False,  # rewrite of already-ingested rows
+    labels = None
+    # an UNPARTITIONED table is one partition, and a mixed-layout cover
+    # (mid-reorg crash or pre-reorg time travel) cannot take label
+    # scopes: old directories carry old labels and the per-label
+    # chains would mask the wrong rowsets — both rewrite the whole
+    # table with no scope, which is layout-agnostic and always sound
+    if (policy.ptype != PartitionType.UNPARTITIONED
+            and not table.has_mixed_layout(0, hi)):
+        # discovery: when the predicate constrains the partition
+        # column, derive candidate labels driver-side and scan ONLY
+        # those __pt directories (metadata pruning); otherwise the full
+        # (column-pruned) collapsed scan.  A partition-key DELETE on a
+        # 100 TB table thus pays O(affected partitions) for discovery
+        # too, not just for the rewrite.
+        pcol_type = next(
+            (c.column_type for c in table.spec.columns
+             if c.name == policy.column),
+            None,
         )
-        return n_before - rs.num_rows
-    # discovery: when the predicate constrains the partition column,
-    # derive candidate labels driver-side and scan ONLY those __pt
-    # directories (metadata pruning); otherwise the full (column-
-    # pruned) collapsed scan.  A partition-key DELETE on a 100 TB
-    # table thus pays O(affected partitions) for discovery too, not
-    # just for the rewrite.
-    pcol_type = next(
-        (c.column_type for c in table.spec.columns
-         if c.name == policy.column),
-        None,
-    )
-    cand = _partition_labels_for_predicate(predicate, policy, pcol_type)
-    if cand == []:
-        return 0  # predicate can route to no partition: zero rows
-    disc = (
-        table.read(0, hi)
-        if cand is None
-        else _read_partitions(table, hi, cand)
-    )
-    labels = sorted(
-        r[0]
-        for r in disc.filter(is_true)
-        .select(partition_label_col(policy).alias("__l"))
-        .distinct()
-        .collect()
-    )
-    if not labels:
-        return 0
-    current = _read_partitions(table, hi, labels)
+        cand = _partition_labels_for_predicate(predicate, policy, pcol_type)
+        if cand == []:
+            return 0  # predicate can route to no partition: zero rows
+        disc = table._collapsed(0, hi, where=_in_labels(cand))
+        labels = sorted(
+            r[0]
+            for r in disc.filter(is_true)
+            .select(partition_label_col(policy).alias("__l"))
+            .distinct()
+            .collect()
+        )
+        if not labels:
+            return 0
+    current = table._collapsed(0, hi, where=_in_labels(labels))
     n_before = current.count()
     remaining = current.filter(~is_true)
     # strict_routing=False: the rewrite only re-routes rows ALREADY
@@ -797,12 +762,8 @@ def delete_where(table: OlapTable, predicate) -> int:
     return n_before - rs.num_rows
 
 
-def _read_partitions(table: OlapTable, hi: int, labels: list[str]):
-    """Collapsed current state of ONLY the given partition labels —
-    the ``__pt`` directory filter prunes every other partition's files
-    out of the scan (a metadata operation, like read_pruned)."""
-    df = table.scan(0, hi, with_hidden=True).filter(
-        F.col(PT_COL).isin(labels)
-    )
-    drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-    return collapse(df.drop(*drop), table.spec)
+def _in_labels(labels: list[str] | None):
+    """Row filter restricting a read to the ``__pt`` directories of
+    ``labels`` (a metadata operation, like read_pruned); ``None`` reads
+    every partition."""
+    return None if labels is None else F.col(PT_COL).isin(list(labels))

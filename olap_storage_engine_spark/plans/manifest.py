@@ -370,7 +370,8 @@ class VersionGraph:
     """Version-interval cover resolution (reference: src/tablet.rs:14-69).
 
     Model: each VISIBLE rowset [s, e] is an edge s -> e+1 in a DAG over
-    version boundaries.  A consistent snapshot of [lo, hi] is a path
+    version boundaries (a partition-scoped one only in its labels'
+    chains, see ``find_covering_path``).  A consistent snapshot of [lo, hi] is a path
     lo -> hi+1; the BFS prefers largest-span edges first so compacted
     rowsets win over the base rowsets they replace, yielding the
     minimal file set (reference: src/tablet.rs:38-65, largest-span
@@ -408,21 +409,45 @@ class VersionGraph:
         for outs in self.edges.values():
             outs.sort(key=lambda r: -r.span)
 
-    def find_covering_path(self, lo: int, hi: int) -> list[RowsetMeta] | None:
-        """BFS for a path lo -> hi+1; None when a hole exists."""
-        target = hi + 1
-        best: dict[int, list[RowsetMeta]] = {lo: []}
-        q: deque[int] = deque([lo])
+    def find_covering_path(
+        self,
+        lo: int,
+        hi: int,
+        label: str | None = None,
+        skip: set[int] = frozenset(),
+    ) -> list[RowsetMeta] | None:
+        """BFS for a path lo -> hi+1; None when a hole exists.
+
+        The path runs along one version chain: the global rowsets plus,
+        given ``label``, the partition-scoped rowsets naming it.
+        ``skip`` holds versions other partitions' scoped rowsets
+        published — no hole in this chain — so a boundary on a skipped
+        version moves on to the chain's next version."""
+
+        def node(boundary: int) -> int:
+            while boundary in skip:
+                boundary += 1
+            return boundary
+
+        start, target = node(lo), node(hi + 1)
+        prev: dict[int, tuple[int, RowsetMeta] | None] = {start: None}
+        q: deque[int] = deque([start])
         while q:
-            node = q.popleft()
-            if node == target:
-                return best[node]
-            for rs in self.edges.get(node, []):
-                nxt = rs.end_version + 1
-                if nxt <= target and nxt not in best:
-                    best[nxt] = best[node] + [rs]
+            at = q.popleft()
+            if at == target:
+                path = []
+                while prev[at] is not None:
+                    at, rs = prev[at]
+                    path.append(rs)
+                return path[::-1]
+            for rs in self.edges.get(at, []):
+                if rs.partitions and label not in rs.partitions:
+                    continue
+                nxt = node(rs.end_version + 1)
+                if nxt <= target and nxt not in prev:
+                    prev[nxt] = (at, rs)
                     q.append(nxt)
-        return best.get(target)
+        return None
 
     def has_version_holes(self, lo: int, hi: int) -> bool:
         """reference: src/tablet.rs:67-69."""
@@ -610,10 +635,11 @@ class Manifest:
                 return
         raise VersionGraphError(f"rowset {rowset_id} not found")
 
-    def mark_stale(self, rowset_id: int, reason: str = "retired") -> None:
-        """reference: src/tablet.rs:155-165.
+    def mark_stale(self, rowset_ids: list[int], reason: str = "retired") -> None:
+        """reference: src/tablet.rs:155-165.  One manifest save for the
+        batch, so a retired cover leaves the visible graph at once.
 
-        ``reason`` records WHY the rowset left the visible graph — the
+        ``reason`` records WHY the rowsets left the visible graph — the
         distinction retention-aware reads and GC need:
 
         * ``"retired"``  — replaced by compaction; its content is
@@ -623,13 +649,16 @@ class Manifest:
         * ``"discarded"`` — rolled back / aborted; its content is
           logically deleted and must never be served again.
         """
+        todo = set(rowset_ids)
         for d in self.doc["rowsets"]:
-            if d["rowset_id"] == rowset_id:
+            if d["rowset_id"] in todo:
                 d["state"] = RowsetState.STALE.value
                 d["stale_reason"] = reason
-                self.save()
-                return
-        raise VersionGraphError(f"rowset {rowset_id} not found")
+                todo.discard(d["rowset_id"])
+        if todo:
+            raise VersionGraphError(f"rowsets {sorted(todo)} not found")
+        if rowset_ids:
+            self.save()
 
     def mark_reclaimed(self, rowset_ids: list[int]) -> None:
         """Record that these STALE rowsets' data directories were
@@ -739,160 +768,127 @@ class Manifest:
         return stale
 
     # -- snapshot reads -------------------------------------------------
-    def capture_consistent_versions(
-        self, lo: int = 0, hi: int | None = None
-    ) -> list[RowsetMeta]:
-        """Resolve the minimal VISIBLE rowset cover of [lo, hi]
-        (reference: src/tablet.rs:131-144); raises on holes.
+    @staticmethod
+    def _graphs(rowsets: list[RowsetMeta]) -> tuple[VersionGraph, VersionGraph]:
+        """The (visible, time-travel) graphs over ``rowsets``."""
+        return VersionGraph(rowsets), VersionGraph(rowsets, include_retired=True)
 
-        When the VISIBLE graph can't cover the interval but ``hi`` is
-        within the published history (``hi <= max_version``), the
-        resolution retries over the TIME-TRAVEL graph — VISIBLE plus
-        compaction-retired STALE rowsets that GC hasn't reclaimed —
-        so pre-compaction snapshots (``read(0, v)``, ``read_as_of``)
-        stay readable until their files age out of the retention
-        window (``garbage_collect(min_retained_version=...)``).
-        Rollback-discarded rowsets are never edges in either graph.
-        """
-        if hi is None:
-            hi = self.max_version
-        if hi < lo:
-            return []
-        rowsets = self.rowsets()
-        cover = VersionGraph(rowsets).find_covering_path(lo, hi)
+    def _chain_cover(
+        self,
+        graphs: tuple[VersionGraph, VersionGraph],
+        lo: int,
+        hi: int,
+        label: str | None = None,
+        skip: set[int] = frozenset(),
+    ) -> list[RowsetMeta]:
+        """Minimal cover of [lo, hi] along one version chain (see
+        ``VersionGraph.find_covering_path``): the VISIBLE graph first;
+        when it can't cover a STRICTLY historical interval
+        (``hi < max_version``), the TIME-TRAVEL graph — VISIBLE plus
+        compaction-retired STALE rowsets that GC hasn't reclaimed — so
+        pre-compaction snapshots (``read(0, v)``, ``read_as_of``) stay
+        readable until their files age out of the retention window
+        (``garbage_collect(min_retained_version=...)``).  The head
+        interval is never quietly served from staled rowsets: a bare
+        mark_stale with no replacement is a version hole there.
+        Raises ``VersionGraphError`` on a hole."""
+        cover = graphs[0].find_covering_path(lo, hi, label, skip)
         if cover is None and hi < self.max_version:
-            # STRICTLY historical reads only: the head interval
-            # (hi == max_version) must never be quietly served from
-            # staled rowsets — a bare mark_stale with no replacement
-            # is a version hole there, not a time-travel fallback
-            cover = VersionGraph(
-                rowsets, include_retired=True
-            ).find_covering_path(lo, hi)
+            cover = graphs[1].find_covering_path(lo, hi, label, skip)
         if cover is None:
             raise VersionGraphError(
                 f"version hole: no consistent cover for [{lo}, {hi}]"
             )
         return cover
 
-    def has_scoped_rowsets(self) -> bool:
-        """True when any VISIBLE rowset is partition-scoped."""
-        return any(r.partitions for r in self.visible_rowsets())
+    def capture_consistent_versions(
+        self, lo: int = 0, hi: int | None = None
+    ) -> list[RowsetMeta]:
+        """Resolve the minimal cover of [lo, hi] over the GLOBAL
+        rowsets (reference: src/tablet.rs:131-144); raises on holes.
+        A partition-scoped rowset serves only its labels, so a version
+        one consumed is a hole here — table reads resolve through
+        ``capture_scoped_plan``, which equals this cover on a table
+        without scoped rowsets."""
+        if hi is None:
+            hi = self.max_version
+        if hi < lo:
+            return []
+        return self._chain_cover(self._graphs(self.rowsets()), lo, hi)
 
     def capture_scoped_plan(
         self, lo: int = 0, hi: int | None = None
     ) -> list[tuple[RowsetMeta, str | None, list[str] | None]]:
-        """Resolve the read plan for [lo, hi] when partition-scoped
-        rowsets may exist.  Returns (rowset, mode, labels) triples:
+        """Resolve the read plan for [lo, hi] — the one snapshot
+        resolver behind every read, rewrite and metadata walk of a
+        table.  Returns (rowset, mode, labels) triples:
 
         * mode ``None``      — read every file of the rowset,
         * mode ``"include"`` — read only ``__pt`` in ``labels``,
         * mode ``"exclude"`` — read only ``__pt`` NOT in ``labels``.
 
-        Semantics: each partition label has its OWN version chain (the
-        reference's per-tablet version graph, src/tablet.rs:14-69) made
-        of the global rowsets plus the scoped rowsets naming it.
-        Version numbers are GLOBAL, so another partition's scoped write
-        consumes a version this chain never sees — chains are therefore
-        resolved in compressed (chain-local) coordinates, where
-        adjacency means "the next version this chain owns", and each
-        chain is clamped to its highest version <= hi (absence of
-        writes, not a hole).  Genuine holes — a version no visible
-        rowset covers at all — still raise, via a table-wide interval
-        union check.  Tables with no scoped rowsets take the legacy
-        global BFS unchanged, including its strict raise on
-        hi > max_version.
+        Semantics: each partition label a scoped rowset names has its
+        OWN version chain (the reference's per-tablet version graph,
+        src/tablet.rs:14-69): the global rowsets plus the scoped
+        rowsets naming it.  Every other label
+        reads the chain of the global rowsets alone, so a table without
+        scoped rowsets is one chain and its plan is exactly
+        ``capture_consistent_versions``.  Version numbers are GLOBAL,
+        so another partition's scoped write consumes a version this
+        chain never sees: each chain skips those versions, which also
+        clamps it to its own highest version <= hi (absence of writes,
+        not a hole).  A chain that no visible or retired path covers —
+        a hole, a delta read (lo > 0) across a scoped rewrite (those
+        start at version 0), or a historical read through a reclaimed
+        or scoped epoch — raises ``VersionGraphError``; no chain ever
+        borrows another chain's rowsets.
 
-        Driver cost: one BFS per touched partition label over that
-        label's rowsets — metadata-only, O(#labels x #rowsets)."""
+        Driver cost: the graphs are built once over the manifest; each
+        chain's BFS then walks only the boundaries it reaches — O(
+        #rowsets + #labels x (cover length + #scoped publishes))."""
         if hi is None:
             hi = self.max_version
         if hi < lo:
             return []
-        visible = self.visible_rowsets()
-        scoped = [rs for rs in visible if rs.partitions]
-        if not scoped:
-            return [
-                (rs, None, None)
-                for rs in self.capture_consistent_versions(lo, hi)
-            ]
-        glob = [rs for rs in visible if not rs.partitions]
-        labels = sorted({l for rs in scoped for l in rs.partitions})
-
-        # table-wide hole check: every version in [lo, min(hi, max end)]
-        # must be covered by SOME visible rowset's interval
-        ival = sorted(
-            (r.start_version, r.end_version)
-            for r in visible
-            if r.end_version >= lo and r.start_version <= hi
-        )
-        reach = lo - 1
-        for s, e in ival:
-            if s > reach + 1:
-                raise VersionGraphError(
-                    f"version hole: no rowset covers [{reach + 1}, {s - 1}]"
-                )
-            reach = max(reach, e)
-
-        def cover_for(rowsets: list[RowsetMeta]) -> list[RowsetMeta]:
-            """BFS cover in chain-local coordinates (see docstring)."""
-            usable = [
-                r
-                for r in rowsets
-                if lo <= r.start_version and r.end_version <= hi
-            ]
-            if not usable:
-                return []
-            points = sorted(
-                {v for r in usable for v in (r.start_version, r.end_version)}
-                | {lo}
-            )
-            rank = {v: i for i, v in enumerate(points)}
-            target = rank[max(r.end_version for r in usable)] + 1
-            edges: dict[int, list[tuple[int, RowsetMeta]]] = {}
-            for r in usable:
-                edges.setdefault(rank[r.start_version], []).append(
-                    (rank[r.end_version] + 1, r)
-                )
-            for outs in edges.values():
-                outs.sort(key=lambda t: -t[0])  # widest reach first
-            best: dict[int, list[RowsetMeta]] = {rank[lo]: []}
-            q: deque[int] = deque([rank[lo]])
-            while q:
-                node = q.popleft()
-                if node == target:
-                    return best[node]
-                for nxt, r in edges.get(node, []):
-                    if nxt <= target and nxt not in best:
-                        best[nxt] = best[node] + [r]
-                        q.append(nxt)
+        if hi > self.max_version:
             raise VersionGraphError(
-                f"version hole: no consistent chain cover for [{lo}, {hi}]"
+                f"version hole: no consistent cover for [{lo}, {hi}]"
             )
-
-        rest_cover = cover_for(glob)
-        in_label = {
-            l: {
-                r.rowset_id
-                for r in cover_for(
-                    glob + [rs for rs in scoped if l in rs.partitions]
-                )
-            }
-            for l in labels
+        rowsets = self.rowsets()
+        graphs = self._graphs(rowsets)
+        published = [
+            r for r in rowsets
+            if r.state == RowsetState.VISIBLE
+            or (r.state == RowsetState.STALE and r.stale_reason == "retired")
+        ]
+        # the rowset that published each version is the first to end
+        # there (rewrites end on versions already published); a scoped
+        # publisher's version is foreign to every label it does not
+        # name.  Reclaimed rowsets keep that record.
+        first: dict[int, RowsetMeta] = {}
+        for r in published:
+            first.setdefault(r.end_version, r)
+        scoped_at = {v: r.partitions for v, r in first.items() if r.partitions}
+        rest = {
+            r.rowset_id
+            for r in self._chain_cover(graphs, lo, hi, None, set(scoped_at))
         }
-        rest_ids = {r.rowset_id for r in rest_cover}
+        labels = sorted({l for r in published for l in r.partitions or ()})
+        served: dict[int, set[str]] = {}
+        for l in labels:
+            skip = {v for v, ps in scoped_at.items() if l not in ps}
+            for r in self._chain_cover(graphs, lo, hi, l, skip):
+                served.setdefault(r.rowset_id, set()).add(l)
         plan: list[tuple[RowsetMeta, str | None, list[str] | None]] = []
-        for rs in visible:
-            if rs.rowset_id in rest_ids:
-                excl = [
-                    l for l in labels if rs.rowset_id not in in_label[l]
-                ]
+        for rs in published:
+            inc = served.get(rs.rowset_id, set())
+            if rs.rowset_id in rest:
+                excl = [l for l in labels if l not in inc]
                 plan.append(
                     (rs, "exclude", excl) if excl else (rs, None, None)
                 )
-            else:
-                inc = [l for l in labels if rs.rowset_id in in_label[l]]
-                if inc:
-                    plan.append((rs, "include", inc))
+            elif inc:
+                plan.append((rs, "include", sorted(inc)))
         return plan
 
     def compaction_score(self) -> int:

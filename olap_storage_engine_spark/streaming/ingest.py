@@ -91,7 +91,7 @@ def stream_ingest(
                 table.commit(rs.rowset_id, txn=txn)
                 return
             table.manifest.with_retry(
-                lambda m: m.mark_stale(rs.rowset_id, reason="discarded")
+                lambda m: m.mark_stale([rs.rowset_id], reason="discarded")
             )
             raise ValueError(
                 f"{table.spec.name}: batch {batch_id} failed audit "

@@ -567,13 +567,13 @@ class OlapTable:
         (operators/compaction.repartition_table); a mixed cover is
         only observable after a mid-reorg crash or under time travel
         into pre-reorg versions."""
-        last = self.last_layout_version()
-        if last == 0:
-            return False
-        plan = self.manifest.capture_scoped_plan(lo, hi)
-        return any(
-            getattr(rs, "schema_version", 1) < last for rs, _, _ in plan
+        return self.last_layout_version() > 0 and self._mixed_layout(
+            self.manifest.capture_scoped_plan(lo, hi)
         )
+
+    def _mixed_layout(self, plan) -> bool:
+        last = self.last_layout_version()
+        return any(rs.schema_version < last for rs, _, _ in plan)
 
     def _replay_schema_ops(self, df: DataFrame, written_v: int) -> DataFrame:
         """Map a rowset's PHYSICAL columns (as written under schema
@@ -602,11 +602,7 @@ class OlapTable:
 
     # -- read path -------------------------------------------------------
     def scan(
-        self,
-        lo: int = 0,
-        hi: int | None = None,
-        with_hidden: bool = False,
-        rowset_filter=None,
+        self, lo: int = 0, hi: int | None = None, with_hidden: bool = False
     ) -> DataFrame:
         """Raw snapshot scan: the file union of the version cover,
         before keys-model collapse.
@@ -615,14 +611,10 @@ class OlapTable:
         of sub-reads, each restricted by a ``__pt`` directory filter
         (metadata-only pruning): a scoped rowset serves only its labels,
         and global rowsets are masked out of the labels a scoped rowset
-        supersedes.
+        supersedes."""
+        return self._scan(self.manifest.capture_scoped_plan(lo, hi), with_hidden)
 
-        ``rowset_filter(rs) -> bool`` drops cover rowsets DRIVER-side
-        (manifest-stats data skipping, see read_skipped) — the caller
-        guarantees dropped rowsets cannot contribute to its result."""
-        plan = self.manifest.capture_scoped_plan(lo, hi)
-        if rowset_filter is not None:
-            plan = [e for e in plan if rowset_filter(e[0])]
+    def _scan(self, plan, with_hidden: bool) -> DataFrame:
         # zero-row rowsets (a partition-scoped rewrite that deleted
         # every surviving row publishes one: the version cover needs
         # the interval, but partitionBy on an empty frame lays down no
@@ -663,7 +655,7 @@ class OlapTable:
         groups: dict[tuple, list[str]] = {}
         gen_wv: dict[tuple, int] = {}
         for rs, mode, labels in plan:
-            wv = getattr(rs, "schema_version", 1)
+            wv = rs.schema_version
             gk = _gen_key(wv)
             full = os.path.join(self.root, rs.path)
             # a CLONED table's borrowed rowsets carry absolute paths
@@ -705,18 +697,47 @@ class OlapTable:
         return df.select(*cols)
 
     def read(self, lo: int = 0, hi: int | None = None) -> DataFrame:
-        """Snapshot read through the keys-model collapse view.
+        """Snapshot read through the keys-model collapse view."""
+        return self._collapsed(lo, hi)
 
-        Fast path: when the cover is a single compaction-written
+    def _collapsed(
+        self,
+        lo: int = 0,
+        hi: int | None = None,
+        where=None,
+        prune=None,
+        rowset_filter=None,
+    ) -> DataFrame:
+        """The collapsed snapshot [lo, hi] — the one read behind
+        ``read``, ``read_skipped``, ``read_pruned``, ``read_point`` and
+        every compaction and DML rewrite: resolve the plan once, scan
+        it with its label masks, filter, collapse.
+
+        ``where`` filters rows before the collapse; callers pass
+        predicates on routing or key columns only.  ``prune`` is a
+        ``__pt``/``__bk`` directory
+        filter that is dropped when the plan mixes partition layouts
+        (old directories carry old labels), so the caller's ``where``
+        must carry correctness without it.  ``rowset_filter(rs) ->
+        bool`` drops plan rowsets DRIVER-side (manifest-stats data
+        skipping, see read_skipped) — the caller guarantees dropped
+        rowsets cannot contribute to its result.
+
+        Fast path: when the plan is a single compaction-written
         rowset, its files already hold the collapsed data — skip the
         merge-on-read window/aggregate entirely (steady state after
         compaction)."""
         plan = self.manifest.capture_scoped_plan(lo, hi)
+        if rowset_filter is not None:
+            plan = [e for e in plan if rowset_filter(e[0])]
+        df = self._scan(plan, with_hidden=True)
+        if prune is not None and not self._mixed_layout(plan):
+            df = df.filter(prune)
+        if where is not None:
+            df = df.filter(where)
         if len(plan) == 1 and plan[0][0].collapsed:
-            return self.scan(lo, hi)
-        df = self.scan(lo, hi, with_hidden=True)
-        drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-        return collapse(df.drop(*drop), self.spec)
+            return df.select(*self.spec.column_names())
+        return collapse(df.drop(PT_COL, BK_COL), self.spec)
 
     def skip_plan(self, col: str, lo_val, hi_val, vlo: int = 0, vhi: int | None = None):
         """(kept, total) rowsets after manifest-stats skipping for
@@ -785,18 +806,14 @@ class OlapTable:
                 f"read_skipped: {col!r} is not a key column — value-"
                 "column skipping is unsound under keys-model collapse"
             )
-        df = self.scan(
+        temporal = self._col_is_temporal(col)
+        return self._collapsed(
             vlo,
             vhi,
-            with_hidden=True,
-            rowset_filter=lambda rs, _t=self._col_is_temporal(col): (
-                self._stats_match(rs, col, lo_val, hi_val, _t)
+            rowset_filter=lambda rs: self._stats_match(
+                rs, col, lo_val, hi_val, temporal
             ),
-        )
-        drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-        return collapse(df.drop(*drop), self.spec).filter(
-            F.col(col).between(F.lit(lo_val), F.lit(hi_val))
-        )
+        ).filter(F.col(col).between(F.lit(lo_val), F.lit(hi_val)))
 
     def read_pruned(
         self,
@@ -820,7 +837,6 @@ class OlapTable:
         out of the file listing entirely.
         """
         policy = self.spec.partition
-        df = self.scan(lo, hi, with_hidden=True)
         pred = None
         labels = None
         if in_values is not None:
@@ -834,19 +850,16 @@ class OlapTable:
             if range_hi is not None:
                 upper = key < F.lit(range_hi)
                 pred = upper if pred is None else (pred & upper)
-        if labels is not None and self.has_mixed_layout(lo, hi):
-            # a pre-reorg rowset's directories carry labels from the
-            # OLD policy — an isin on current labels would wrongly
-            # exclude its rows.  Correctness never depended on the
-            # label filter (the residual row predicate enforces the
-            # range); drop only the pruning step.
-            labels = None
-        if labels is not None:
-            df = df.filter(F.col(PT_COL).isin(labels))
-        if pred is not None:
-            df = df.filter(pred)
-        drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-        return collapse(df.drop(*drop), self.spec)
+        # on a mixed-layout plan the label filter is dropped: a
+        # pre-reorg rowset's directories carry labels from the OLD
+        # policy.  Correctness never depended on it (the residual row
+        # predicate enforces the range).
+        return self._collapsed(
+            lo,
+            hi,
+            where=pred,
+            prune=None if labels is None else F.col(PT_COL).isin(labels),
+        )
 
     def read_as_of(self, ts: float) -> DataFrame:
         """Time travel: snapshot as of a wall-clock time — reads the
@@ -885,18 +898,18 @@ class OlapTable:
         from .operators.routing import fnv1a64
 
         bucket = self.spec.bucket
-        df = self.scan(lo, hi, with_hidden=True)
-        if bucket.btype == BucketType.HASH and bucket.column is not None:
-            if not self.has_mixed_layout(lo, hi):
-                # pre-reorg rowsets' __bk directories were routed under
-                # the OLD bucket count — directory pruning is only
-                # sound on a single-layout cover; the key equality
-                # below carries correctness either way
-                b = fnv1a64(str(key_value)) % bucket.num_buckets
-                df = df.filter(F.col(BK_COL) == b)
-            df = df.filter(F.col(bucket.column) == F.lit(key_value))
-        drop = [c for c in (PT_COL, BK_COL) if c in df.columns]
-        return collapse(df.drop(*drop), self.spec)
+        if bucket.btype != BucketType.HASH or bucket.column is None:
+            return self._collapsed(lo, hi)
+        # pre-reorg rowsets' __bk directories were routed under the OLD
+        # bucket count, so the bucket prune drops on a mixed-layout
+        # plan; the key equality carries correctness either way
+        b = fnv1a64(str(key_value)) % bucket.num_buckets
+        return self._collapsed(
+            lo,
+            hi,
+            where=F.col(bucket.column) == F.lit(key_value),
+            prune=F.col(BK_COL) == b,
+        )
 
     def register_bucketed(
         self, table_name: str, num_buckets: int | None = None
@@ -1005,17 +1018,56 @@ class OlapTable:
     def compaction_score(self) -> int:
         return self.manifest.compaction_score()
 
+    def _plan_files(self, plan):
+        """(partition label, parquet path) of every file a read plan
+        serves — a rowset's masked-out ``__pt`` directories are
+        skipped.  The listing uses os.walk (local/posix warehouse); an
+        object-store deployment would swap in the store's listing API
+        here."""
+        for rs, mode, labels in plan:
+            root = os.path.join(self.root, rs.path)
+            for dp, _, fns in os.walk(root):
+                label = next(
+                    (
+                        p.split("=", 1)[1]
+                        for p in os.path.relpath(dp, root).split(os.sep)
+                        if p.startswith(f"{PT_COL}=")
+                    ),
+                    None,
+                )
+                if mode is not None and (mode == "include") != (label in labels):
+                    continue
+                for fn in fns:
+                    if fn.endswith(".parquet"):
+                        yield label, os.path.join(dp, fn)
+
     def stats(self) -> dict:
-        """Table statistics from the manifest (reference D6: num_rows /
-        data sizes) — metadata-only, no scan."""
-        visible = self.manifest.visible_rowsets()
+        """Table statistics of the head read plan (reference D6:
+        num_rows / data sizes) — metadata-only, no scan: a whole
+        rowset counts from the manifest, a label-masked one from the
+        footers of the files it serves."""
+        import pyarrow.parquet as pq
+
+        plan = self.manifest.capture_scoped_plan()
+        num_rows = data_size = num_files = 0
+        for rs, mode, labels in plan:
+            files = [fp for _, fp in self._plan_files([(rs, mode, labels)])]
+            num_files += len(files)
+            if mode is None:
+                num_rows += rs.num_rows
+                data_size += rs.data_size
+            else:
+                num_rows += sum(
+                    pq.ParquetFile(fp).metadata.num_rows for fp in files
+                )
+                data_size += sum(os.path.getsize(fp) for fp in files)
         return {
             "table": self.spec.name,
             "keys_type": self.spec.keys_type.value,
-            "num_rows": sum(r.num_rows for r in visible),
-            "data_size": sum(r.data_size for r in visible),
-            "num_rowsets": len(visible),
-            "num_files": self.visible_file_count(),
+            "num_rows": num_rows,
+            "data_size": data_size,
+            "num_rowsets": len(plan),
+            "num_files": num_files,
             "max_version": self.manifest.max_version,
             "schema_version": self.spec.schema_version,
         }
@@ -1024,36 +1076,19 @@ class OlapTable:
         """Per-partition-label statistics from parquet FOOTERS only
         (label, num_rows, num_files, data_size) — the partitions
         metadata table (reference D6 granularity applied per tablet).
-        Driver-side directory walk over the VISIBLE cover; no data
+        Driver-side directory walk over the head read plan; no data
         pages read, so cost is O(files) footer reads regardless of
         row count."""
         import pyarrow.parquet as pq
 
-        plan = self.manifest.capture_scoped_plan(0, None)
         agg: dict[str, list[int]] = {}
-        for rs, mode, labels in plan:
-            root = os.path.join(self.root, rs.path)
-            for dp, _, fns in os.walk(root):
-                seg = [
-                    p.split("=", 1)[1]
-                    for p in dp.split(os.sep)
-                    if p.startswith(f"{PT_COL}=")
-                ]
-                if not seg:
-                    continue
-                label = seg[0]
-                if mode == "include" and label not in (labels or []):
-                    continue
-                if mode == "exclude" and label in (labels or []):
-                    continue
-                for fn in fns:
-                    if not fn.endswith(".parquet"):
-                        continue
-                    fp = os.path.join(dp, fn)
-                    a = agg.setdefault(label, [0, 0, 0])
-                    a[0] += pq.ParquetFile(fp).metadata.num_rows
-                    a[1] += 1
-                    a[2] += os.path.getsize(fp)
+        for label, fp in self._plan_files(self.manifest.capture_scoped_plan()):
+            if label is None:
+                continue
+            a = agg.setdefault(label, [0, 0, 0])
+            a[0] += pq.ParquetFile(fp).metadata.num_rows
+            a[1] += 1
+            a[2] += os.path.getsize(fp)
         rows = [
             (label, a[0], a[1], a[2]) for label, a in sorted(agg.items())
         ]
@@ -1068,29 +1103,22 @@ class OlapTable:
         fixture queries ran ``df.agg(min(...)).collect()``, a full
         column scan to choose a constant.
 
-        ``lo``/``hi`` restrict the walk to the version cover [lo, hi]
-        (default: all visible rowsets) — e.g. the min key within just
-        the most recently published delta.
+        ``lo``/``hi`` restrict the walk to the read plan of [lo, hi]
+        (default: the head) — e.g. the min key within just the most
+        recently published delta.
 
         Footers are read CONCURRENTLY (thread pool — pyarrow releases
         the GIL during I/O), so wall time is bounded by storage
-        latency, not footer count.  The listing itself uses os.walk
-        (local/posix warehouse); an object-store deployment would swap
-        in the store's listing API here — the rest is unchanged."""
+        latency, not footer count."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow.parquet as pq
 
-        if lo == 0 and hi is None:
-            cover = self.manifest.visible_rowsets()
-        else:
-            cover = self.manifest.capture_consistent_versions(lo, hi)
         files = [
-            os.path.join(dp, fn)
-            for rs in cover
-            for dp, _, fns in os.walk(os.path.join(self.root, rs.path))
-            for fn in fns
-            if fn.endswith(".parquet")
+            fp
+            for _, fp in self._plan_files(
+                self.manifest.capture_scoped_plan(lo, hi)
+            )
         ]
 
         def file_min(fp: str):
@@ -1117,17 +1145,10 @@ class OlapTable:
         return min(mins) if mins else None
 
     def visible_file_count(self) -> int:
-        cover = self.manifest.visible_rowsets()
-        n = 0
-        for rs in cover:
-            d = os.path.join(self.root, rs.path)
-            n += sum(
-                1
-                for dp, _, fns in os.walk(d)
-                for fn in fns
-                if fn.endswith(".parquet")
-            )
-        return n
+        """Parquet files the head read plan serves."""
+        return sum(
+            1 for _ in self._plan_files(self.manifest.capture_scoped_plan())
+        )
 
 
 def clone_table(

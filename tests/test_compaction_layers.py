@@ -8,6 +8,7 @@ from olap_storage_engine_spark.operators.compaction import (
     compact,
     compact_base,
     compact_cumulative,
+    merge_into,
 )
 from olap_storage_engine_spark.spec import (
     AggregateType,
@@ -125,3 +126,24 @@ def test_stats(spark, warehouse):
     assert s["max_version"] == 1
     assert s["data_size"] > 0
     assert s["keys_type"] == "AGGREGATE"
+
+
+def test_cumulative_after_unpartitioned_merge(spark, warehouse):
+    """An UNPARTITIONED merge publishes [0, 2] over the granular
+    rowsets; cumulative compaction stops above it and base compaction
+    folds everything into one rowset."""
+    t = OlapTable.create(spark, _agg_spec("um"), warehouse)
+    _write_n(spark, t, 1)  # v0
+    compact_cumulative(t)  # layer point -> 1
+    _write_n(spark, t, 1)  # v1
+    merge_into(
+        t, spark.createDataFrame([(0, 100.0), (9, 9.0)], "k long, v double")
+    )  # v2 = [0, 2]
+    want = sorted(map(tuple, t.read().collect()))
+    assert (0, 100.0) in want and (9, 9.0) in want
+    compact_cumulative(t)
+    assert t.manifest.cumulative_layer_point == 3
+    assert sorted(map(tuple, t.read().collect())) == want
+    compact_base(t)
+    assert t.compaction_score() == 1
+    assert sorted(map(tuple, t.read().collect())) == want

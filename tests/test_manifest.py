@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from olap_storage_engine_spark.plans.manifest import (
@@ -80,7 +82,7 @@ def test_mark_stale_and_score(tmp_path):
     for i in range(5):
         m.publish(rs(i + 1, i, i))
     assert m.compaction_score() == 5
-    m.mark_stale(1)
+    m.mark_stale([1])
     assert m.compaction_score() == 4
     with pytest.raises(VersionGraphError):
         m.capture_consistent_versions(0, 4)  # v0 now uncovered
@@ -157,7 +159,7 @@ def test_generation_monotone_across_saves(tmp_path):
     m.save()
     g1 = m.doc["generation"]
     m.publish(rs(1, 0, 0))
-    m.mark_stale(1)
+    m.mark_stale([1])
     m2 = Manifest.load(root)
     assert m2.doc["generation"] == g1 + 2
     # same instance keeps saving fine (its generation tracks disk)
@@ -609,3 +611,142 @@ def test_generation_claim_cas_recover_rereads_after_replace(tmp_path):
     assert got == 5
     assert json.load(open(path))["generation"] == 5
     assert json.load(open(path))["v"] == "v5"
+
+
+def test_scoped_plan_is_the_global_cover_without_scoped_rowsets(tmp_path):
+    """With no partition-scoped rowset the one snapshot plan is exactly
+    capture_consistent_versions' cover — historical fallback and
+    errors included — on random interval sets, some retired or
+    discarded."""
+    import random
+
+    rng = random.Random(7)
+    fates = [
+        (RowsetState.VISIBLE, None),
+        (RowsetState.STALE, "retired"),
+        (RowsetState.STALE, "discarded"),
+    ]
+
+    def outcome(fn):
+        try:
+            return sorted(r.rowset_id for r in fn())
+        except VersionGraphError:
+            return "raise"
+
+    for _ in range(150):
+        m = Manifest(str(tmp_path))
+        rowsets = []
+        for i in range(rng.randint(1, 8)):
+            lo = rng.randint(0, 5)
+            r = rs(i + 1, lo, lo + rng.randint(0, 3))
+            r.state, r.stale_reason = rng.choice(fates)
+            rowsets.append(r)
+        m.doc["rowsets"] = [r.to_dict() for r in rowsets]
+        m.doc["max_version"] = max(r.end_version for r in rowsets)
+        for lo in range(m.max_version + 1):
+            for hi in range(lo, m.max_version + 2):
+                plan = outcome(
+                    lambda: [e[0] for e in m.capture_scoped_plan(lo, hi)]
+                )
+                assert plan == outcome(
+                    lambda: m.capture_consistent_versions(lo, hi)
+                ), (m.doc["rowsets"], lo, hi)
+
+
+def test_scoped_plan_serves_each_label_its_writes_once(tmp_path):
+    """Random ingest / scoped DML / compaction / partition compaction /
+    reclaim sequences, at the manifest level: every plan that resolves
+    serves each label every version that wrote it inside [lo, hi]
+    exactly once and none outside, from rowsets holding that label,
+    never from discarded or reclaimed rowsets and at the head never
+    from retired ones; the head read always resolves."""
+    import random
+
+    labels = ["p1", "p2", "p3"]
+
+    def served(mode, ls):
+        if mode is None:
+            return set(labels)
+        return set(ls) if mode == "include" else set(labels) - set(ls)
+
+    for seed in range(80):
+        rng = random.Random(seed)
+        m = Manifest(str(tmp_path / str(seed)))
+        os.makedirs(m.table_root)
+        writes: dict[int, set[str]] = {}  # version -> labels it wrote
+
+        def publish(lo, hi, partitions=None):
+            m.publish(RowsetMeta(m.next_rowset_id(), lo, hi, "r",
+                                 partitions=partitions))
+
+        def retire(lo, hi, scope=None):
+            covered = [
+                r.rowset_id for r in m.visible_rowsets()
+                if lo <= r.start_version and r.end_version <= hi
+                and (scope is None
+                     or (r.partitions and set(r.partitions) <= set(scope)))
+            ]
+            m.mark_stale(covered)
+
+        for _ in range(12):
+            op = rng.choice(["ingest", "ingest", "dml", "dml", "compact",
+                             "pcompact", "reclaim"])
+            top = m.max_version
+            if op == "ingest" or top < 0:
+                publish(top + 1, top + 1)
+                writes[top + 1] = set(labels)
+            elif op == "dml":
+                scope = sorted(rng.sample(labels, rng.randint(1, 2)))
+                publish(0, top + 1, scope)
+                writes[top + 1] = set(scope)
+            elif op == "compact":  # compaction.compact's shrink rule
+                lo, hi = rng.randint(0, top), top
+                vis = m.visible_rowsets()
+                moved = True
+                while moved and lo <= hi:
+                    moved = False
+                    for r in vis:
+                        if r.start_version < lo <= r.end_version:
+                            lo, moved = r.end_version + 1, True
+                        if r.start_version <= hi < r.end_version:
+                            hi, moved = r.start_version - 1, True
+                inside = [r for r in vis
+                          if lo <= r.start_version and r.end_version <= hi]
+                if len(inside) > 1:
+                    retire(lo, hi)
+                    publish(lo, hi)
+            elif op == "pcompact":
+                scope = [rng.choice(labels)]
+                retire(0, top, scope)
+                publish(0, top, scope)
+            else:
+                old = [r.rowset_id for r in m.rowsets()
+                       if r.state == RowsetState.STALE]
+                m.mark_reclaimed(rng.sample(old, len(old) // 2))
+            top = m.max_version
+            for hi in range(top + 1):
+                for lo in range(hi + 1):
+                    try:
+                        plan = m.capture_scoped_plan(lo, hi)
+                    except VersionGraphError:
+                        assert (lo, hi) != (0, top), (seed, m.doc)
+                        continue
+                    for r, mode, ls in plan:
+                        assert not r.reclaimed and (
+                            r.state == RowsetState.VISIBLE
+                            or (hi < top and r.stale_reason == "retired")
+                        ), (seed, lo, hi, r)
+                    for l in labels:
+                        ivals = [
+                            (r.start_version, r.end_version)
+                            for r, mode, ls in plan if l in served(mode, ls)
+                        ]
+                        for v, wrote in writes.items():
+                            if l in wrote:
+                                n = sum(s <= v <= e for s, e in ivals)
+                                want = 1 if lo <= v <= hi else 0
+                                assert n == want, (seed, lo, hi, l, v, plan)
+                    for r, mode, ls in plan:
+                        assert not r.partitions or served(mode, ls) <= set(
+                            r.partitions
+                        ), (seed, lo, hi, r)

@@ -15,9 +15,13 @@ from pyspark.sql import functions as F
 
 from olap_storage_engine_spark.operators.compaction import (
     compact,
+    compact_base,
+    compact_cumulative,
     delete_where,
+    garbage_collect,
     merge_into,
 )
+from olap_storage_engine_spark.plans.manifest import VersionGraphError
 from olap_storage_engine_spark.spec import (
     BucketSpec,
     BucketType,
@@ -214,7 +218,7 @@ def test_compact_folds_scoped_chains(spark, warehouse):
     want = _rows(t.read())
     compact(t)
     assert t.compaction_score() == 1
-    assert not t.manifest.has_scoped_rowsets()
+    assert not any(rs.partitions for rs in t.manifest.visible_rowsets())
     assert _rows(t.read()) == want
 
 
@@ -469,8 +473,8 @@ def test_partition_key_delete_discovery_is_pruned(spark, warehouse):
     candidate partition's files (PartitionFilters on __pt), and the
     delete itself stays correct."""
     from olap_storage_engine_spark.operators.compaction import (
+        _in_labels,
         _partition_labels_for_predicate,
-        _read_partitions,
     )
 
     t = _table(spark, warehouse, "disc2")
@@ -481,7 +485,7 @@ def test_partition_key_delete_discovery_is_pruned(spark, warehouse):
     assert cand == ["__unrouted__", "p2"]
     from olap_storage_engine_spark.plans.explain import formatted_plan
 
-    plan = formatted_plan(_read_partitions(t, t.manifest.max_version, cand))
+    plan = formatted_plan(t._collapsed(where=_in_labels(cand)))
     # the __pt predicate lands in PartitionFilters (directory pruning,
     # not a post-scan row filter)
     pf = [
@@ -700,3 +704,123 @@ def test_arrow_assignment_matches_jvm_window(spark):
         .collect()
     }
     assert got == want
+
+
+def _df(spark, rows):
+    return spark.createDataFrame(rows, "k long, d string, amount double")
+
+
+def _merge_between_ingests(spark, t):
+    """Layer point at 1, then ingest v1, a scoped merge v2 (a new key
+    in p2, published as [0, 2]) and ingest v3."""
+    compact_cumulative(t)  # a single rowset: nothing to fold
+    t.write(_df(spark, [(7, "2024-01-15", 70.0)]))
+    merge_into(t, _df(spark, [(99, "2024-02-25", 990.0)]))
+    t.write(_df(spark, [(8, "2024-03-15", 80.0)]))
+    assert t.manifest.cumulative_layer_point == 1
+    assert t.manifest.max_version == 3
+
+
+def test_cumulative_compaction_after_scoped_merge_keeps_rows(spark, warehouse):
+    """The merge rewrite [0, 2] straddles the layer point, so cumulative
+    compaction must stop above it instead of folding [1, 3] into a
+    rowset that hides the merge from p2's chain."""
+    t = _table(spark, warehouse, "psd_cum")
+    _merge_between_ingests(spark, t)
+    want = _rows(t.read())
+    assert len(want) == 9
+    compact_cumulative(t)
+    assert t.manifest.cumulative_layer_point == 4
+    assert _rows(t.read()) == want
+
+
+def test_base_compaction_folds_a_stopped_cumulative(spark, warehouse):
+    t = _table(spark, warehouse, "psd_base")
+    _merge_between_ingests(spark, t)
+    want = _rows(t.read())
+    compact_cumulative(t)
+    compact_base(t)
+    assert t.compaction_score() == 1
+    assert _rows(t.read()) == want
+
+
+def test_historical_read_after_compaction_and_scoped_dml(spark, warehouse):
+    """read(0, 1) after compact(0, 2) is served from the retired
+    rowsets, and a later scoped DML must not turn it into an empty
+    plan; once the history is reclaimed the read raises."""
+    t = _table(spark, warehouse, "psd_hist")
+    t.write(_df(spark, [(7, "2024-01-15", 70.0)]))  # v1
+    t.write(_df(spark, [(8, "2024-03-15", 80.0)]))  # v2
+    compact(t, 0, 2)
+    want = _rows(t.read(0, 1))
+    assert len(want) == 7
+    merge_into(t, _df(spark, [(3, "2024-02-10", 300.0)]))  # v3, scope p2
+    assert _rows(t.read(0, 1)) == want
+    garbage_collect(t)
+    with pytest.raises(VersionGraphError):
+        t.read(0, 1)
+
+
+def test_stats_follow_the_read_plan(spark, warehouse):
+    """stats() and column_min count what a read serves: a rowset's
+    partitions superseded by a scoped rewrite are not counted twice,
+    and a deleted key is not the minimum."""
+    t = _table(spark, warehouse, "psd_stats")
+    merge_into(t, _df(spark, [(3, "2024-02-10", 300.0)]))  # rewrites p2
+    s = t.stats()
+    assert s["num_rows"] == t.read().count() == 6
+    assert s["num_rowsets"] == 2
+    delete_where(t, F.col("k") == 1)  # rewrites p1
+    assert t.stats()["num_rows"] == 5
+    assert t.column_min("k") == 2
+
+
+def test_historical_read_across_partition_compaction(spark, warehouse):
+    """compact_partitions retires p2's merge; p2's chain at version 1
+    then needs that retired scoped rowset, so read(0, 1) raises instead
+    of serving p2 from the base without the merge."""
+    from olap_storage_engine_spark.operators.compaction import (
+        compact_partitions,
+    )
+
+    t = _table(spark, warehouse, "psd_pc_hist")
+    base = _rows(t.read())
+    merge_into(t, _df(spark, [(3, "2024-02-10", 300.0)]))  # v1, scope p2
+    t.write(_df(spark, [(7, "2024-01-15", 70.0)]))  # v2
+    compact_partitions(t, ["p2"])
+    assert _rows(t.read(0, 0)) == base
+    with pytest.raises(VersionGraphError):
+        t.read(0, 1)
+    assert {r["k"]: r["amount"] for r in t.read().collect()}[3] == 300.0
+
+
+def test_historical_read_after_a_stopped_cumulative(spark, warehouse):
+    """The cumulative pass stops above the merge rewrite [0, 2] and
+    folds only [3, 4].  read(0, 3) then needs the retired [3, 3] in
+    every chain: p2 reads it after its merge rowset, p1 and p3 after
+    the untouched v0/v1 rowsets — none may borrow p2's merge rowset as
+    if it held the whole table."""
+    t = _table(spark, warehouse, "psd_cum_hist")
+    _merge_between_ingests(spark, t)
+    t.write(_df(spark, [(9, "2024-01-25", 90.0)]))  # v4
+    want = _rows(t.read(0, 3))
+    assert len(want) == 9
+    want_min = t.column_min("amount", 0, 3)
+    compact_cumulative(t)
+    assert t.compaction_score() == 4  # v0, v1, the merge, [3, 4]
+    assert _rows(t.read(0, 3)) == want
+    assert t.column_min("amount", 0, 3) == want_min
+    assert len(t.read().collect()) == 10
+
+
+def test_delta_read_across_scoped_merge_raises(spark, warehouse):
+    """A delta read (lo > 0) whose window holds a scoped merge raises:
+    the merge rewrite starts at version 0, so no delta of p2 exists for
+    the window.  Windows on either side of the merge stay readable."""
+    t = _table(spark, warehouse, "psd_delta")
+    _merge_between_ingests(spark, t)  # v1 ingest, v2 merge, v3 ingest
+    assert _rows(t.read(1, 1)) == [(7, "2024-01-15", 70.0)]
+    assert _rows(t.read(3, 3)) == [(8, "2024-03-15", 80.0)]
+    for lo, hi in [(1, 2), (1, 3), (2, 3)]:
+        with pytest.raises(VersionGraphError):
+            t.read(lo, hi)

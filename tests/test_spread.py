@@ -96,11 +96,14 @@ def _stage_tasks(spark, df) -> list[int]:
     finally:
         sc._jsc.clearJobGroup()
     tracker = sc.statusTracker()
-    return [
-        tracker.getStageInfo(sid).numTasks
+    # a stage the job skipped (its shuffle output was reused) never ran
+    # and has no stage info
+    infos = (
+        tracker.getStageInfo(sid)
         for jid in tracker.getJobIdsForGroup(group)
         for sid in tracker.getJobInfo(jid).stageIds
-    ]
+    )
+    return [info.numTasks for info in infos if info is not None]
 
 
 def _cases():
