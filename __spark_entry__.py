@@ -3933,8 +3933,8 @@ def q_schema_evolution_rename(spark, sf_dir):
     src/meta.rs:57): rowset 0's files physically carry
     ``o_orderstatus`` (and a since-dropped ``o_comment``), rowset 1's
     carry ``status``; one snapshot read serves both generations under
-    the current name via schema-log replay
-    (table.OlapTable.rename_column / _replay_schema_ops)."""
+    the current name: the old generation's read schema names the old
+    column (table.OlapTable.rename_column / _physical_names)."""
     t = get_table(spark, sf_dir, "orders_evolve_nonadd")
     return t.read().select(
         "o_orderkey",

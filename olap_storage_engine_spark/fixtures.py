@@ -1880,7 +1880,7 @@ def _build_orders_evolve_readd(spark: SparkSession, sf_dir: str) -> OlapTable:
     drop_column + add_column(INT64), rowset 1 carries it as INT64.
     Reads must surface the old generation's flag as typed NULLs — the
     stale VARCHAR bytes in the old files must never leak into the new
-    column (the schema-log replay drops them before the null fill)."""
+    column (the read schema of the pre-drop rowset leaves them out)."""
     spec = TableSpec(
         name="orders_evolve_readd",
         columns=[
@@ -1911,8 +1911,8 @@ def _build_orders_evolve_readd(spark: SparkSession, sf_dir: str) -> OlapTable:
 def _build_orders_evolve_widen(spark: SparkSession, sf_dir: str) -> OlapTable:
     """Type-widening evolution fixture: rowset 0 carries ``qty`` as
     INT32; after widen_column(INT64), rowset 1 stores values past the
-    int32 range.  Reads must cast the old generation's physical int32
-    to long during schema-log replay and serve one bigint column."""
+    int32 range.  The Parquet reader promotes the old generation's
+    physical int32 to long, and reads serve one bigint column."""
     spec = TableSpec(
         name="orders_evolve_widen",
         columns=[

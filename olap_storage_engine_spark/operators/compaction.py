@@ -733,25 +733,29 @@ def delete_where(table: OlapTable, predicate) -> int:
         cand = _partition_labels_for_predicate(predicate, policy, pcol_type)
         if cand == []:
             return 0  # predicate can route to no partition: zero rows
+        # one job yields both the labels to rewrite and the deleted
+        # count (rows the rewrite drops are exactly these)
         disc = table._collapsed(0, hi, where=_in_labels(cand))
-        labels = sorted(
-            r[0]
-            for r in disc.filter(is_true)
-            .select(partition_label_col(policy).alias("__l"))
-            .distinct()
+        counts = dict(
+            disc.filter(is_true)
+            .groupBy(partition_label_col(policy).alias("__l"))
+            .count()
             .collect()
         )
-        if not labels:
+        if not counts:
             return 0
+        labels = sorted(counts)
+        deleted = sum(counts.values())
     current = table._collapsed(0, hi, where=_in_labels(labels))
-    n_before = current.count()
+    if labels is None:
+        deleted = current.filter(is_true).count()
     remaining = current.filter(~is_true)
     # strict_routing=False: the rewrite only re-routes rows ALREADY
     # admitted at ingest — with the __unrouted__ sentinel in scope, a
     # surviving unrouted row is data to preserve, not a routing error
     # (the strict default made any partial-match DELETE over the
     # sentinel partition raise after rmtree'ing the rowset)
-    rs = table.write(
+    table.write(
         remaining,
         start_version=0,
         end_version=hi + 1,
@@ -759,7 +763,7 @@ def delete_where(table: OlapTable, predicate) -> int:
         partitions=labels,
         strict_routing=False,
     )
-    return n_before - rs.num_rows
+    return deleted
 
 
 def _in_labels(labels: list[str] | None):

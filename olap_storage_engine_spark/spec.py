@@ -345,13 +345,14 @@ class TableSpec:
     # Append-only evolution log (reference declares schema_version at
     # src/meta.rs:57; the executable semantics live here).  Each entry
     # is {"v": <schema_version the op created>, "op": "add"|"drop"|
-    # "rename", ...op fields...}.  A rowset written under version wv
-    # is read by replaying every entry with v > wv over its physical
-    # columns (rename -> withColumnRenamed, drop -> drop, add -> the
-    # typed-null fill) — the Iceberg idea expressed over names, sound
-    # because a dropped name may only be re-added AFTER the drop is
-    # logged, so the replay always discards the stale physical column
-    # before the null-fill materializes its successor.
+    # "rename"|"widen"|"repartition", ...op fields...}.  A rowset
+    # written under version wv is read with the schema that walking
+    # every entry with v > wv backwards from the current columns gives
+    # (OlapTable._physical_names: rename -> the old name, add -> left
+    # out, surfacing as typed nulls) — the Iceberg idea expressed over
+    # names, sound because a dropped name may only be re-added AFTER
+    # the drop is logged, so a pre-drop rowset never reads the stale
+    # physical column under its successor's name.
     schema_log: list = field(default_factory=list)
 
     # names used internally by the write/read path (hidden metadata and

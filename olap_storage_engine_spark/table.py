@@ -13,10 +13,13 @@ Maps the reference's storage lifecycle onto Spark's columnar stack:
   in the manifest.
 - Read (reference: src/tablet.rs:131-144 snapshot cover +
   src/segment.rs:273-310 column scan) -> ``OlapTable.read``: resolve the
-  BFS version cover, load the file union, apply the keys-model collapse
-  view; filters/projections on the returned DataFrame push down to
-  Parquet automatically (zone-map/bloom/dictionary live inside Parquet,
-  reference: src/index/mod.rs + src/encoding/mod.rs -> all built-in).
+  BFS version cover, scan it with one Parquet reader per (schema
+  generation, base directory) whose schema comes from the spec (no
+  schema-inference job: building a read launches no Spark job), apply
+  the keys-model collapse view; filters/projections on the returned
+  DataFrame push down to Parquet automatically (zone-map/bloom/
+  dictionary live inside Parquet, reference: src/index/mod.rs +
+  src/encoding/mod.rs -> all built-in).
 
 Layout:  {warehouse}/{table}/__rsv={start}_{end}/{__pt=<label>/}{__bk=<id>/}part-*.parquet
 (the __rsv/__pt/__bk names are reserved; user columns must not use them)
@@ -34,7 +37,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from .operators.keys_model import SEQ_COL, VERSION_COL, collapse, with_write_metadata
 from .operators.routing import bucket_id_col, partition_label_col
@@ -46,6 +49,7 @@ from .plans.manifest import (
 )
 from .spec import BucketType, ColumnType, KeysType, PartitionType, TableSpec
 
+RSV_COL = "__rsv"  # rowset directory column
 PT_COL = "__pt"  # partition label directory column
 BK_COL = "__bk"  # bucket id directory column
 
@@ -106,6 +110,38 @@ class StaleReplicaError(RuntimeError):
     """A bucketed read replica reflects an older base-table version
     than the current manifest — refresh it (``read_bucketed`` default)
     or re-register."""
+
+
+# (frame type, spec type) pairs the Parquet reader promotes when a scan
+# reads a written rowset back under the spec's schema
+_READ_PROMOTIONS = {
+    (T.IntegerType(), T.LongType()),
+    (T.FloatType(), T.DoubleType()),
+    (T.IntegerType(), T.DoubleType()),
+    (T.TimestampNTZType(), T.TimestampType()),
+}
+
+
+def _readable_as(have: T.DataType, want: T.DataType) -> bool:
+    if isinstance(have, T.ArrayType) and isinstance(want, T.ArrayType):
+        return _readable_as(have.elementType, want.elementType)
+    return have == want or (have, want) in _READ_PROMOTIONS
+
+
+def _mask_filter(masks: dict):
+    """The label masks of one reader's rowsets as one directory filter:
+    an OR over mask groups of ``__rsv IN (dirs) AND __pt [NOT] IN
+    (labels)``.  It names directory columns only, so Spark prunes it at
+    file listing."""
+    cond = None
+    for (mode, labels), rsvs in masks.items():
+        c = F.col(RSV_COL).isin(rsvs)
+        if mode == "include":
+            c = c & F.col(PT_COL).isin(list(labels))
+        elif mode == "exclude":
+            c = c & ~F.col(PT_COL).isin(list(labels))
+        cond = c if cond is None else cond | c
+    return cond
 
 
 class OlapTable:
@@ -205,6 +241,18 @@ class OlapTable:
                 f"{self.spec.schema_hash()} != manifest hash {expected} — "
                 "refusing to publish against a drifted schema"
             )
+        # reads take their schema from the spec, so a column the
+        # Parquet reader cannot convert to its spec type would publish
+        # an unreadable rowset
+        have = {f.name: f.dataType for f in df.schema.fields}
+        bad = [
+            f"{c.name}: {have[c.name].simpleString()} is not "
+            f"{c.spark_type().simpleString()}"
+            for c in self.spec.columns
+            if c.name in have and not _readable_as(have[c.name], c.spark_type())
+        ]
+        if bad:
+            raise TypeError(f"{self.spec.name}: frame column types {bad}")
         if start_version is None:
             start_version = self.manifest.max_version + 1
         if end_version is None:
@@ -463,11 +511,11 @@ class OlapTable:
 
         Metadata-only (the Iceberg discipline): the spec loses the
         column and logs the drop; old rowsets keep the physical data
-        until compaction naturally rewrites them, and the read path
-        discards the column during schema-log replay.  The name may be
-        re-added later — even at a different type — because replay
-        drops the stale physical column from every pre-drop rowset
-        before the typed-null fill surfaces its successor.
+        until compaction naturally rewrites them, and the read schema
+        of those rowsets leaves the column out (``_physical_names``).
+        The name may be re-added later — even at a different type —
+        because a rowset older than the re-add never reads that name:
+        its successor surfaces there as typed nulls.
 
         Key columns cannot be dropped (the keys-model collapse is
         keyed on them); partition/bucket source columns cannot be
@@ -488,8 +536,9 @@ class OlapTable:
     def rename_column(self, old: str, new: str) -> None:
         """Non-additive schema evolution: rename a column (key or
         value) across rowset generations.  Metadata-only: old rowsets'
-        physical files keep the old name; the read path renames during
-        schema-log replay, so every snapshot — including time travel
+        physical files keep the old name; the read schema of those
+        rowsets names the old column and the scan aliases it
+        (``_physical_names``), so every snapshot — including time travel
         into pre-rename versions — serves the CURRENT name.
 
         Partition/bucket source columns are refused (their names are
@@ -518,8 +567,9 @@ class OlapTable:
         """Non-additive schema evolution: widen a column's type along
         an exact-promotion edge (INT32->INT64, FLOAT32->FLOAT64,
         INT32->FLOAT64).  Metadata-only like drop/rename: old rowsets
-        keep the narrow physical type and the read path casts during
-        schema-log replay; new writes carry the wide type physically.
+        keep the narrow physical type, which the Parquet reader
+        promotes to the wide read-schema type; new writes carry the
+        wide type physically.
 
         Key and routing-source columns are allowed: routing hashes and
         partition bounds compare the STRINGIFIED key (routing.py), and
@@ -575,51 +625,54 @@ class OlapTable:
         last = self.last_layout_version()
         return any(rs.schema_version < last for rs, _, _ in plan)
 
-    def _replay_schema_ops(self, df: DataFrame, written_v: int) -> DataFrame:
-        """Map a rowset's PHYSICAL columns (as written under schema
-        version ``written_v``) to the CURRENT schema by replaying the
-        spec's evolution log forward.  Pure projection — stays inside
-        whole-stage codegen, costs nothing at any scale."""
-        from .spec import _SPARK_TYPES, ColumnType
+    def _physical_names(self, written_v: int) -> tuple[tuple[str, str], ...]:
+        """(current name, physical name) of every current column that a
+        rowset written under schema version ``written_v`` holds —
+        derived from the spec alone by walking the evolution log
+        backwards over the entries newer than ``written_v``:
 
-        for e in self.spec.schema_log:
+        - ``rename`` maps the current name back to the old one;
+        - ``add`` means the rowset predates the column: it is left out
+          and surfaces as typed nulls (this is also what hides the
+          stale physical column of a name dropped and then re-added);
+        - ``drop`` needs no step: a current column that carries the
+          dropped name was added or renamed into it later, and that
+          newer entry was already undone;
+        - ``widen`` keeps the current type, which the Parquet reader
+          promotes the narrow physical type to.
+
+        Pure metadata: no footer is opened."""
+        phys = {n: n for n in self.spec.column_names()}  # current -> physical
+        for e in reversed(self.spec.schema_log):
             if e["v"] <= written_v:
-                continue
-            if e["op"] == "rename" and e["old"] in df.columns:
-                df = df.withColumnRenamed(e["old"], e["new"])
-            elif e["op"] == "drop" and e["name"] in df.columns:
-                df = df.drop(e["name"])
-            elif e["op"] == "widen" and e["name"] in df.columns:
-                df = df.withColumn(
-                    e["name"],
-                    F.col(e["name"]).cast(
-                        _SPARK_TYPES[ColumnType(e["to"])]
-                    ),
-                )
-            # "add" needs no replay — the physical column is simply
-            # absent and the typed-null fill below supplies it
-        return df
+                break
+            if e["op"] == "rename":
+                phys = {c: e["old"] if p == e["new"] else p for c, p in phys.items()}
+            elif e["op"] == "add":
+                phys = {c: p for c, p in phys.items() if p != e["name"]}
+        return tuple(phys.items())
 
     # -- read path -------------------------------------------------------
     def scan(
         self, lo: int = 0, hi: int | None = None, with_hidden: bool = False
     ) -> DataFrame:
-        """Raw snapshot scan: the file union of the version cover,
-        before keys-model collapse.
+        """Raw snapshot scan: the rows of the version cover, before
+        keys-model collapse.
 
-        With partition-scoped rowsets in the cover, the scan is a union
-        of sub-reads, each restricted by a ``__pt`` directory filter
-        (metadata-only pruning): a scoped rowset serves only its labels,
-        and global rowsets are masked out of the labels a scoped rowset
-        supersedes."""
+        One schema-given Parquet reader per (schema generation, base
+        directory): no footer is opened to learn a schema, so building
+        the scan launches no Spark job, and each reader lists its files
+        once.  Partition-scoped rowsets in the cover become one
+        ``__rsv``/``__pt`` directory filter (metadata-only pruning): a
+        scoped rowset serves only its labels, and global rowsets are
+        masked out of the labels a scoped rowset supersedes."""
         return self._scan(self.manifest.capture_scoped_plan(lo, hi), with_hidden)
 
     def _scan(self, plan, with_hidden: bool) -> DataFrame:
         # zero-row rowsets (a partition-scoped rewrite that deleted
         # every surviving row publishes one: the version cover needs
         # the interval, but partitionBy on an empty frame lays down no
-        # parquet files) contribute nothing and their directories are
-        # unreadable without a schema — skip them driver-side
+        # parquet files) contribute nothing — skip them driver-side
         plan = [e for e in plan if e[0].num_rows > 0]
         if not plan:
             df = self.spark.createDataFrame([], self.spec.spark_schema())
@@ -628,73 +681,59 @@ class OlapTable:
                 df = df.withColumn(BK_COL, F.lit(None).cast("int"))
             return df
 
-        def _reader(base):
-            r = self.spark.read.option("basePath", base)
-            if self.spec.schema_version > 1:
-                # evolved tables mix file schemas; merge footers so new
-                # columns survive (single-version tables skip the cost)
-                r = r.option("mergeSchema", "true")
-            return r
-
-        # one parquet scan per distinct filter shape, so the unscoped
-        # case stays a single reader over the path union (unchanged).
-        # Rowsets additionally group by their EFFECTIVE schema
-        # generation — the set of drop/rename log entries newer than
-        # their write version.  Same-generation rowsets share one
-        # reader (for a never-evolved table that set is always empty,
-        # so the grouping adds nothing); cross-generation rowsets get
-        # per-group replay before the union, which is what lets one
-        # snapshot read span a rename or drop.
-        def _gen_key(wv: int) -> tuple:
-            return tuple(
-                i
-                for i, e in enumerate(self.spec.schema_log)
-                if e["v"] > wv and e["op"] in ("drop", "rename", "widen")
-            )
-
-        groups: dict[tuple, list[str]] = {}
-        gen_wv: dict[tuple, int] = {}
+        # readers keyed by (physical column names, base): every rowset
+        # of one schema generation shares a reader.  A CLONED table's
+        # borrowed rowsets carry absolute paths into the source root
+        # (clone_table), and basePath must be an ancestor of every path
+        # in a reader, so borrowed and native rowsets read separately.
+        groups: dict[tuple, tuple[list[str], dict]] = {}
         for rs, mode, labels in plan:
-            wv = rs.schema_version
-            gk = _gen_key(wv)
             full = os.path.join(self.root, rs.path)
-            # a CLONED table's borrowed rowsets carry absolute paths
-            # into the source root (clone_table) — basePath must be an
-            # ancestor of every path in the reader, so borrowed and
-            # native rowsets split into separate readers by base
-            base = self.root if not os.path.isabs(rs.path) else os.path.dirname(full)
-            key = (mode, tuple(labels) if labels else (), gk, base)
-            groups.setdefault(key, []).append(full)
-            # any write version with the same pending-replay set reads
-            # identically; keep the smallest for the replay call
-            gen_wv[key] = min(gen_wv.get(key, wv), wv)
-        parts = []
-        for (mode, labels, gk, base), paths in groups.items():
-            part = _reader(base).parquet(*paths)
-            if gk:
-                part = self._replay_schema_ops(
-                    part, gen_wv[(mode, labels, gk, base)]
-                )
-            if mode == "include":
-                part = part.filter(F.col(PT_COL).isin(list(labels)))
-            elif mode == "exclude":
-                part = part.filter(~F.col(PT_COL).isin(list(labels)))
-            parts.append(part)
-        df = parts[0]
-        for part in parts[1:]:
-            df = df.unionByName(part, allowMissingColumns=True)
-        # basePath keeps the __pt/__bk directory columns visible for
-        # partition pruning; hide internals unless asked.
-        # additive schema evolution: rowsets written before an
-        # add_column lack the new column — surface it as typed nulls
-        for c in self.spec.columns:
-            if c.name not in df.columns:
-                df = df.withColumn(c.name, F.lit(None).cast(c.spark_type()))
-        cols = self.spec.column_names()
-        if with_hidden:
-            cols = cols + [c for c in (VERSION_COL, SEQ_COL, PT_COL, BK_COL)
-                           if c in df.columns]
-        return df.select(*cols)
+            base = os.path.dirname(full) if os.path.isabs(rs.path) else self.root
+            paths, masks = groups.setdefault(
+                (self._physical_names(rs.schema_version), base), ([], {})
+            )
+            paths.append(full)
+            rsv = os.path.basename(full).split("=", 1)[1]
+            masks.setdefault((mode, tuple(labels or ())), []).append(rsv)
+
+        hidden = [
+            T.StructField(VERSION_COL, T.LongType()),
+            T.StructField(SEQ_COL, T.LongType()),
+            T.StructField(RSV_COL, T.StringType()),
+            T.StructField(PT_COL, T.StringType()),
+            T.StructField(BK_COL, T.IntegerType()),
+        ]
+        out = [VERSION_COL, SEQ_COL, PT_COL, BK_COL] if with_hidden else []
+        df = None
+        for (names, base), (paths, masks) in groups.items():
+            phys = dict(names)
+            schema = T.StructType(
+                [
+                    T.StructField(phys[c.name], c.spark_type())
+                    for c in self.spec.columns
+                    if c.name in phys
+                ]
+                + hidden
+            )
+            part = (
+                self.spark.read.schema(schema)
+                .option("basePath", base)
+                .parquet(*paths)
+            )
+            if any(mode is not None for mode, _ in masks):
+                part = part.filter(_mask_filter(masks))
+            part = part.select(
+                *(
+                    F.col(phys[c.name]).alias(c.name)
+                    if c.name in phys
+                    else F.lit(None).cast(c.spark_type()).alias(c.name)
+                    for c in self.spec.columns
+                ),
+                *out,
+            )
+            df = part if df is None else df.unionByName(part)
+        return df
 
     def read(self, lo: int = 0, hi: int | None = None) -> DataFrame:
         """Snapshot read through the keys-model collapse view."""
