@@ -18,7 +18,12 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from olap_storage_engine_spark.fixtures import get_table
+from olap_storage_engine_spark.fixtures import (
+    artifact_path,
+    artifact_rows,
+    get_table,
+    read_artifact,
+)
 from olap_storage_engine_spark.operators import dedup as dd
 from olap_storage_engine_spark.operators import multimodal as mm
 from olap_storage_engine_spark.operators import similarity as sim
@@ -280,9 +285,7 @@ def q_dpp_join_prune(spark, sf_dir):
     and the fact scan lists ONLY those year directories — at 100 TB
     the difference between scanning 2 partitions and all of them.
     Plan pinned by tests/test_plans.py::test_dpp_join_prunes_fact."""
-    from olap_storage_engine_spark.fixtures import lineitem_year_path
-
-    fact = spark.read.parquet(lineitem_year_path(spark, sf_dir))
+    fact = read_artifact(spark, sf_dir, "lineitem_year")
     dim = (
         load_table(spark, sf_dir, "orders")
         .filter(
@@ -448,16 +451,14 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_dedup_minhash(spark, sf_dir):
     """MinHash banded LSH served from the PERSISTED signature index
-    (fixtures.minhash_sigs_path, derived from the publish-time shingle
+    (fixtures.ARTIFACTS["minhash_sigs"], derived from the publish-time shingle
     index): the per-run tokenize/shingle/md5 scan AND the signature
     aggregate both happen once per publish, so the query is bands ->
     bucket self-join -> distinct over 150k narrow rows.  Declared
     semantics and oracle are UNCHANGED from the inline
     ``minhash_candidates`` (n=3, 8 hashes, 2-row bands);
     tests/test_llm_ops.py pins indexed ≡ inline at both layers."""
-    from olap_storage_engine_spark.fixtures import minhash_sigs_path
-
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     return dd.minhash_candidates_from_sigs(sigs, num_hashes=8, band_rows=2)
 
 
@@ -467,7 +468,7 @@ def q_dedup_simhash(spark, sf_dir):
 
 def q_dedup_simhash_groups(spark, sf_dir):
     """Serving-path simhash dedup: exact-fingerprint collision groups
-    from the PERSISTED fingerprint table (fixtures.simhash_fps_path)
+    from the PERSISTED fingerprint table (fixtures.ARTIFACTS["simhash_fps"])
     — one hash-aggregate keyed on the fingerprint, zero joins, never
     tokenizes.  The banded-LSH pair expansion
     (dd.simhash_candidates_from_fps) exists for radius>0 lookups but
@@ -478,9 +479,7 @@ def q_dedup_simhash_groups(spark, sf_dir):
     1.1M at 16, of 12.5M possible) — a corpus property, not a plan
     property.  Group-then-keep is the O(N) shape that serves exact
     simhash dedup at 100 TB."""
-    from olap_storage_engine_spark.fixtures import simhash_fps_path
-
-    fps = spark.read.parquet(simhash_fps_path(spark, sf_dir))
+    fps = read_artifact(spark, sf_dir, "simhash_fps")
     return (
         fps.groupBy("simhash")
         .agg(
@@ -508,7 +507,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 
 def q_dedup_ngram_indexed(spark, sf_dir):
     """n-gram Jaccard served from the PERSISTED shingle index
-    (fixtures.shingle_index_path — the dedup family's tokenize/
+    (fixtures.ARTIFACTS["shingle_index"] — the dedup family's tokenize/
     shingle/hash substrate materialized at publish time, the same
     build-once pattern as doc_postings / emb_cells): the query starts
     at the posting-list aggregate, so a stable corpus pays the
@@ -522,10 +521,8 @@ def q_dedup_ngram_indexed(spark, sf_dir):
     run, the indexed path reads 3 narrow columns — and the index
     refreshes per publish delta, amortized across every dedup/minhash
     consumer.  Identical answers, same oracle as dedup_ngram_jaccard."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
     sh = (
-        spark.read.parquet(shingle_index_path(spark, sf_dir))
+        read_artifact(spark, sf_dir, "shingle_index")
         .filter(F.col("n") == 5)
         .select("doc_id", "sz", "sh")
     )
@@ -539,14 +536,9 @@ def q_dedup_minhash_verified(spark, sf_dir):
     band-collision false positives; this is the query a production
     dedup actually runs — entirely from the two publish-time indexes,
     no tokenize pass anywhere in the plan."""
-    from olap_storage_engine_spark.fixtures import (
-        minhash_sigs_path,
-        shingle_index_path,
-    )
-
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     idx3 = (
-        spark.read.parquet(shingle_index_path(spark, sf_dir))
+        read_artifact(spark, sf_dir, "shingle_index")
         .filter(F.col("n") == 3)
         .select("doc_id", "sz", "sh")
     )
@@ -565,28 +557,24 @@ def _minhash_pairs_indexed(spark, sf_dir):
     """Shared candidate-pair source for the cluster/keepset queries:
     the persisted signature index (pairs ≡ inline minhash_candidates,
     pinned by tests/test_llm_ops.py::test_minhash_indexed_equals_inline)."""
-    from olap_storage_engine_spark.fixtures import minhash_sigs_path
-
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     return dd.minhash_candidates_from_sigs(sigs, num_hashes=8, band_rows=2)
 
 
 def _cluster_table(spark, sf_dir):
     """The persisted (doc_id, cluster_id) near-dup cluster table —
-    resolved once per corpus publish (fixtures.neardup_clusters_path,
+    resolved once per corpus publish (fixtures.ARTIFACTS["neardup_clusters"],
     delta-refreshed through dedup.cluster_delta_refresh); the three
     cluster-serving queries read it instead of re-running the CC
     closure per query (r14 / VERDICT r13 task 3)."""
-    from olap_storage_engine_spark.fixtures import neardup_clusters_path
-
-    return spark.read.parquet(neardup_clusters_path(spark, sf_dir))
+    return read_artifact(spark, sf_dir, "neardup_clusters")
 
 
 def q_dedup_clusters(spark, sf_dir):
     """Cluster resolution served from the PUBLISH-TIME cluster table:
     (doc_id, cluster_id), cluster_id = elected canonical (lowest
     member id).  The iterative connected-components closure runs once
-    per publish (fixtures.neardup_clusters_path), never inside a
+    per publish (fixtures.ARTIFACTS["neardup_clusters"]), never inside a
     query plan — this query is one parquet read (plan-pinned in
     tests/test_plans.py).  The inline pairs->CC derivation survives
     as dd.neardup_clusters for one-shot corpora."""
@@ -652,10 +640,8 @@ def q_decontaminate_indexed(spark, sf_dir):
     maintained, never re-tokenized at query time; only the tiny
     benchmark set is shingled inline.  Same keep-set as
     ``decontaminate_bench`` (identical width and hash)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     return dd.decontaminate_from_index(
         docs, idx, _bench_docs(docs), n=5
     ).select("doc_id", "lang", "source")
@@ -674,9 +660,7 @@ def q_dsir_sample(spark, sf_dir):
     partition-pruned): the corpus is never tokenized at query time —
     gram identity is (n, sh), count-equivalent to the oracle's string
     grams (operators/text.dsir_select_from_grams)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     raw_g = idx.filter(F.col("n") <= 2).select("doc_id", "n", "sh")
     tgt_g = raw_g.filter(F.col("doc_id") % 97 == 0)
     return tx.dsir_select_from_grams(
@@ -691,10 +675,8 @@ def q_decontamination_report(spark, sf_dir):
     at all.  Corpus side = the PERSISTED shingle index (never
     re-tokenized); the tiny bench set is shingled inline and
     broadcast (operators/dedup.decontamination_report)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
     docs = load_table(spark, sf_dir, "documents")
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     corpus_grams = idx.filter(
         (F.col("n") == 5) & (F.col("doc_id") % 97 != 0)
     ).select("doc_id", "sh")
@@ -733,9 +715,7 @@ def q_gram_novelty(spark, sf_dir):
     curation novelty curve, served entirely from the persisted shingle
     index: one min-per-gram aggregate + a co-partitioned join back
     (operators/dedup.gram_novelty)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     return dd.gram_novelty(
         idx.filter(F.col("n") == 5).select("doc_id", "sh")
     )
@@ -770,10 +750,8 @@ def q_similarity_int8_topk(spark, sf_dir):
     the embedding column is never read — and scores with exact integer
     dot products, bit-reproducible in the oracle
     (operators/similarity.int8_topk_from_codes;
-    fixtures.int8_codes_path)."""
-    from olap_storage_engine_spark.fixtures import int8_codes_path
-
-    codes = spark.read.parquet(int8_codes_path(spark, sf_dir))
+    the ``int8_codes`` artifact)."""
+    codes = read_artifact(spark, sf_dir, "int8_codes")
     ids = [
         r["vec_id"]
         for r in _probes(spark, sf_dir, 5).select("vec_id").collect()
@@ -842,11 +820,7 @@ def _corpus_prep_served_stages(spark, sf_dir):
     inline pipeline by construction (the artifacts are built by the
     same operators — pinned by tests/test_llm_ops.py row-identity and
     the unchanged shared oracle)."""
-    from olap_storage_engine_spark.fixtures import (
-        doc_stats_path,
-        minhash_sigs_build_params,
-        minhash_sigs_path,
-    )
+    from olap_storage_engine_spark.fixtures import minhash_sigs_build_params
 
     num_hashes, n = minhash_sigs_build_params()
     if (num_hashes, n) != (8, 3):
@@ -856,11 +830,11 @@ def _corpus_prep_served_stages(spark, sf_dir):
             f"n={n}) but declares (8, 3) — rebuild the index or "
             "update the declared pipeline params together"
         )
-    stats = spark.read.parquet(doc_stats_path(spark, sf_dir))
+    stats = read_artifact(spark, sf_dir, "doc_stats")
     corpus = stats.filter(F.col("quality") >= 0.95)
     keep = corpus.groupBy("text_sha").agg(F.min("doc_id").alias("doc_id"))
     ex = corpus.join(keep.select("doc_id"), "doc_id", "semi")
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     pairs = dd.minhash_candidates_from_sigs(
         sigs.join(ex.select("doc_id"), "doc_id", "semi"),
         num_hashes=8,
@@ -1123,27 +1097,43 @@ def q_similarity_ann_ivf(spark, sf_dir):
 
 def q_similarity_ann_pq(spark, sf_dir):
     """Product-quantization ANN: the corpus serves from its PERSISTED
-    m-byte PQ codes (fixtures.pq_index_paths — trained and encoded at
-    build time, ~64x smaller than the vectors), scored by
+    m-byte PQ codes (fixtures.ARTIFACTS["pq_codes"] — trained and
+    encoded at build time, ~64x smaller than the vectors), scored by
     asymmetric-distance lookup against a broadcast probe-LUT, then
     exact-rescored on the candidate set only.  Codebook training is
     the same deterministic sampled k-means as IVF run per subspace,
     so the whole path — codebooks, codes, ADC candidates, final
     ranks — is oracle-reproducible in SQL."""
-    from olap_storage_engine_spark.fixtures import pq_index_paths
-
-    cb_path, codes_path = pq_index_paths(spark, sf_dir)
     probes = _probes(spark, sf_dir).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
     )
     return sim.pq_topk(
         probes,
-        spark.read.parquet(codes_path),
-        spark.read.parquet(cb_path),
+        read_artifact(spark, sf_dir, "pq_codes"),
+        read_artifact(spark, sf_dir, "pq_codebooks"),
         load_table(spark, sf_dir, "embeddings"),
         k=10,
         n_candidates=50,
     )
+
+
+def _ivf_route(spark, sf_dir):
+    """The IVF query-router step, driver-side: each standard probe's 4
+    nearest cells against the centroid index.  Both the centroids and
+    the probe set are pyarrow-read from their artifacts, so the
+    resolve costs ZERO Spark jobs (a corpus orderBy+limit collect per
+    serve before r14).  Returns (sorted cell ids, probe-cell rows)."""
+    probes = artifact_rows(
+        spark, sf_dir, "ann_probes", ("vec_id", "embedding")
+    )
+    cents = artifact_rows(
+        spark, sf_dir, "ivf_centroids", ("cent_id", "cent_vec")
+    )
+    pc = sim.ivf_probe_cells_local(sorted(probes), sorted(cents), n_probe=4)
+    probe_cells = spark.createDataFrame(
+        pc, "probe_id long, probe_vec array<float>, cent_id long"
+    )
+    return sorted({cid for _, _, cid in pc}), probe_cells
 
 
 def q_similarity_ann_ivf_cells(spark, sf_dir):
@@ -1166,30 +1156,14 @@ def q_similarity_ann_ivf_cells(spark, sf_dir):
     the scan is n_probe/n_centroids of the data by construction, which
     is the entire point of IVF at scale.  Same results, same oracle.
 
-    The router resolve is DRIVER-side (ivf_probe_cells_local over the
-    pyarrow-read centroid index + the collected probe set): the whole
-    query is one small probe-collect job plus ONE distributed serve
-    job over the pruned cells.
+    The router resolve is DRIVER-side (``_ivf_route``: pyarrow-read
+    centroid index and probe set): the whole query is ONE distributed
+    serve job over the pruned cells.
     """
-    from olap_storage_engine_spark.fixtures import (
-        ivf_centroids_rows,
-        standard_probe_rows,
-    )
-
-    cells_t = get_table(spark, sf_dir, "emb_cells")
-    cent_rows = ivf_centroids_rows(spark, sf_dir)
-    # probes pyarrow-read from the persisted eval artifact — the
-    # router resolve costs ZERO Spark jobs (fixtures.standard_probe_rows;
-    # was a corpus orderBy+limit collect job per serve, r14)
-    probe_rows = standard_probe_rows(spark, sf_dir)
-    pc = sim.ivf_probe_cells_local(probe_rows, cent_rows, n_probe=4)
-    cell_ids = sorted({cid for _, _, cid in pc})
-    probe_cells = spark.createDataFrame(
-        pc, "probe_id long, probe_vec array<float>, cent_id long"
-    )
-    cells = cells_t.read_pruned(in_values=cell_ids).select(
-        "cent_id", "vec_id", "embedding"
-    )
+    cell_ids, probe_cells = _ivf_route(spark, sf_dir)
+    cells = get_table(spark, sf_dir, "emb_cells").read_pruned(
+        in_values=cell_ids
+    ).select("cent_id", "vec_id", "embedding")
     return sim.rank_cell_candidates(cells, probe_cells, k=sim.ANN_EVAL_K)
 
 
@@ -1204,31 +1178,14 @@ def q_similarity_ann_ivfpq(spark, sf_dir):
     for the exact rescore.  Whole path re-derived in SQL (coarse
     k-means + per-subspace k-means + code assignment + routed ADC),
     hash-matched."""
-    from olap_storage_engine_spark.fixtures import (
-        ivf_centroids_rows,
-        pq_index_paths,
-        standard_probe_rows,
-    )
-
-    cells_t = get_table(spark, sf_dir, "emb_cells_pq")
-    cb_path, _ = pq_index_paths(spark, sf_dir)
-    cent_rows = ivf_centroids_rows(spark, sf_dir)
-    # probes pyarrow-read from the persisted eval artifact — the
-    # router resolve costs ZERO Spark jobs (fixtures.standard_probe_rows;
-    # was a corpus orderBy+limit collect job per serve, r14)
-    probe_rows = standard_probe_rows(spark, sf_dir)
-    pc = sim.ivf_probe_cells_local(probe_rows, cent_rows, n_probe=4)
-    cell_ids = sorted({cid for _, _, cid in pc})
-    probe_cells = spark.createDataFrame(
-        pc, "probe_id long, probe_vec array<float>, cent_id long"
-    )
-    cells = cells_t.read_pruned(in_values=cell_ids).select(
-        "cent_id", "vec_id", "codes"
-    )
+    cell_ids, probe_cells = _ivf_route(spark, sf_dir)
+    cells = get_table(spark, sf_dir, "emb_cells_pq").read_pruned(
+        in_values=cell_ids
+    ).select("cent_id", "vec_id", "codes")
     return sim.ivfpq_topk(
         cells,
         probe_cells,
-        spark.read.parquet(cb_path),
+        read_artifact(spark, sf_dir, "pq_codebooks"),
         load_table(spark, sf_dir, "embeddings"),
         k=10,
         n_candidates=50,
@@ -1274,9 +1231,7 @@ def q_text_bm25_indexed(spark, sf_dir):
     over the LIST-pruned width-1 partition — the corpus is never
     tokenized at query time (operators/text.bm25_rank_from_index).
     Identical results and oracle to the inline text_bm25."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     return tx.bm25_rank_from_index(idx, ["vector", "merge", "filter"])
 
 
@@ -1312,8 +1267,6 @@ def q_embedding_corpus_prep(spark, sf_dir):
     standard SemDeDup practice; the summary is one broadcast-sized
     left join + one aggregate.  Pairs come from the PERSISTED cell
     table (emb_cells) like dedup_semantic — no query-time argmax."""
-    from olap_storage_engine_spark.fixtures import get_table
-
     emb = load_table(spark, sf_dir, "embeddings")
     cells = get_table(spark, sf_dir, "emb_cells").read()
     pairs = dd.semantic_dedup_pairs_from_cells(cells, threshold=0.3)
@@ -1489,10 +1442,8 @@ def q_dedup_exact_substring(spark, sf_dir):
     """Fixed-width exact-substring dedup served from the PERSISTED
     shingle index at width 5 (operators/dedup.duplicated_span_stats):
     per-doc count/fraction of 5-gram spans shared with other docs."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
     idx = (
-        spark.read.parquet(shingle_index_path(spark, sf_dir))
+        read_artifact(spark, sf_dir, "shingle_index")
         .filter(F.col("n") == 5)
         .select("doc_id", "sz", "sh")
     )
@@ -1521,9 +1472,7 @@ def q_text_lm_score(spark, sf_dir):
     scan; n IN (1,2) partition prune).  Exact fixed-point micro-nats,
     row-identical to the inline path
     (operators/text.bigram_lm_scores_from_index)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
-
-    idx = spark.read.parquet(shingle_index_path(spark, sf_dir))
+    idx = read_artifact(spark, sf_dir, "shingle_index")
     return tx.bigram_lm_scores_from_index(
         idx.filter(F.col("n") <= 2).select("doc_id", "n", "sh", "sh1", "m")
     )
@@ -1553,15 +1502,13 @@ def q_ann_recall_eval(spark, sf_dir):
     top-10 over the same probes — the evaluation every ANN deployment
     publishes next to its index (operators/similarity.ann_recall).
 
-    The exact side is the PERSISTED truth set (fixtures.ann_truth_path
-    — built once per corpus publish, r14 / VERDICT r13 task 2), so the
+    The exact side is the PERSISTED truth set (the ``ann_truth_k10``
+    artifact, fixtures.ARTIFACTS — built once per corpus publish), so the
     eval is two index reads + one join: no corpus scan, no per-probe
     ranking window in the plan (pinned in tests/test_plans.py).  The
     inline brute-force ranking survives as the declared
     similarity_topk query — the cold-corpus baseline."""
-    from olap_storage_engine_spark.fixtures import ann_truth_path
-
-    truth = spark.read.parquet(ann_truth_path(spark, sf_dir))
+    truth = read_artifact(spark, sf_dir, "ann_truth_k10")
     return sim.ann_recall(truth, q_similarity_ann_ivf(spark, sf_dir))
 
 
@@ -1597,16 +1544,14 @@ def q_quality_classifier_train_eval(spark, sf_dir):
     (operators/text.nb_confusion).
 
     r14 optimization: the weights come from the PERSISTED model
-    (fixtures.nb_model_path — trained once per publish by the same
+    (fixtures.ARTIFACTS["nb_model"] — trained once per publish by the same
     closed-form trainer on the same labeled corpus, so they are
     bit-identical to an in-query retrain; the ann_recall_eval
     persisted-truth discipline).  Training itself stays exercised
     inline by quality_classifier_train; the eval pays one corpus
     scoring pass, not train + eval."""
-    from olap_storage_engine_spark.fixtures import nb_model_path
-
     docs = _labeled_docs(spark, sf_dir)
-    w = spark.read.parquet(nb_model_path(spark, sf_dir))
+    w = read_artifact(spark, sf_dir, "nb_model")
     return tx.nb_confusion(docs, w, label_col="__lbl", positive="pos")
 
 
@@ -1615,27 +1560,23 @@ def q_embedding_outliers(spark, sf_dir):
     cluster centroid falls below 0.17 — the corrupt-embedding detector,
     served from the persisted cell table + broadcast centroid index
     with zero shuffles (operators/similarity.centroid_outliers)."""
-    from olap_storage_engine_spark.fixtures import get_table, ivf_centroids
-
     return sim.centroid_outliers(
         get_table(spark, sf_dir, "emb_cells").read(),
-        ivf_centroids(spark, sf_dir),
+        read_artifact(spark, sf_dir, "ivf_centroids"),
         threshold=0.17,
     )
 
 
 def q_quality_classifier_serve(spark, sf_dir):
-    """Serve the PERSISTED NB quality model (fixtures.nb_model_path —
+    """Serve the PERSISTED NB quality model (fixtures.ARTIFACTS["nb_model"] —
     trained once at publish time, stored as a tiny parquet weight
     table): per-document predictions via broadcast join + exact-
     decimal margins; training never runs inside the query plan — the
     train-once/serve-many model-registry pattern
     (operators/text.nb_predict)."""
-    from olap_storage_engine_spark.fixtures import nb_model_path
-
     return tx.nb_predict(
         load_table(spark, sf_dir, "documents"),
-        spark.read.parquet(nb_model_path(spark, sf_dir)),
+        read_artifact(spark, sf_dir, "nb_model"),
     )
 
 
@@ -1674,12 +1615,10 @@ def q_dedup_minhash_pr_eval(spark, sf_dir):
     exact ratios (operators/dedup.lsh_pr_eval).  BOTH sides serve
     from publish-time artifacts (r12): the truth pair set is a
     constant of (corpus, n, threshold) persisted like every other
-    index (fixtures.truth_pairs_path), so the eval never re-expands
+    index (fixtures.ARTIFACTS["truth_pairs_n3"]), so the eval never re-expands
     the shingle co-occurrence pairs — its formerly dominant cost."""
-    from olap_storage_engine_spark.fixtures import truth_pairs_path
-
     cand = _minhash_pairs_indexed(spark, sf_dir)
-    truth = spark.read.parquet(truth_pairs_path(spark, sf_dir))
+    truth = read_artifact(spark, sf_dir, "truth_pairs_n3")
     return dd.lsh_pr_eval(cand, truth)
 
 
@@ -1752,9 +1691,7 @@ def q_similarity_kmeans_centroids(spark, sf_dir):
     k-means recipe (sample mod 4, lowest-id init, 2 Lloyd iterations,
     6dp mean rounding) is bit-reproducible across engines, which is
     the foundation every IVF/PQ/SemDeDup oracle stands on."""
-    from olap_storage_engine_spark.fixtures import ivf_centroids
-
-    c = ivf_centroids(spark, sf_dir)
+    c = read_artifact(spark, sf_dir, "ivf_centroids")
     return c.select(
         "cent_id", F.posexplode("cent_vec").alias("pos", "val")
     ).select("cent_id", F.col("pos").cast("int").alias("pos"), "val")
@@ -1799,8 +1736,6 @@ def q_dedup_semantic(spark, sf_dir):
     IVF layout the ANN cell path reads): stored cell ids, exact cosine
     within cells only; the broadcast-argmax assignment never runs at
     query time (operators/dedup.semantic_dedup_pairs_from_cells)."""
-    from olap_storage_engine_spark.fixtures import get_table
-
     cells = get_table(spark, sf_dir, "emb_cells").read()
     return dd.semantic_dedup_pairs_from_cells(cells, threshold=0.3)
 
@@ -2779,9 +2714,7 @@ def q_zorder_scan(spark, sf_dir):
     row-group stats prune most of the file in each — 1-D sorting can
     only do that for its leading column.  tests/test_clustering.py
     measures the footer-stats pruning directly."""
-    from olap_storage_engine_spark.fixtures import zorder_lineitem_path
-
-    li = spark.read.parquet(zorder_lineitem_path(spark, sf_dir))
+    li = read_artifact(spark, sf_dir, "lineitem_zorder")
     return (
         li.filter(
             F.col("l_partkey").between(100, 300)
@@ -3112,9 +3045,9 @@ def q_ingest_jsonl(spark, sf_dir):
             T.StructField("n_chars", T.LongType()),
         ]
     )
-    from olap_storage_engine_spark.fixtures import ingest_export
 
-    df = read_jsonl(spark, ingest_export(spark, sf_dir, "jsonl"), schema)
+    path = artifact_path(spark, sf_dir, "ingest_jsonl")
+    df = read_jsonl(spark, path, schema)
     return df.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_chars").alias("total_chars"),
@@ -3140,9 +3073,7 @@ def q_ingest_orc(spark, sf_dir):
     overflows near 10^16, which 100 TB of lineitem actually reaches —
     so the wide-decimal tax is the price of exact order-independent
     sums and stays."""
-    from olap_storage_engine_spark.fixtures import ingest_export
-
-    df = spark.read.orc(ingest_export(spark, sf_dir, "orc"))
+    df = spark.read.orc(artifact_path(spark, sf_dir, "ingest_orc"))
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
         _dsum("l_extendedprice").alias("sum_price"),
@@ -3167,9 +3098,8 @@ def q_ingest_csv(spark, sf_dir):
             T.StructField("o_orderpriority", T.StringType()),
         ]
     )
-    from olap_storage_engine_spark.fixtures import ingest_export
 
-    df = read_csv(spark, ingest_export(spark, sf_dir, "csv"), schema)
+    df = read_csv(spark, artifact_path(spark, sf_dir, "ingest_csv"), schema)
     return df.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
         _dsum("o_totalprice").alias("sum_price"),
@@ -3185,10 +3115,9 @@ def q_ingest_binaryfile(spark, sf_dir):
     layer.  The oracle closes the loop end-to-end: file bytes are the
     documents' UTF-8 text, so doc_id/size/md5 must round-trip exactly
     (sources/ingest.read_binary_files)."""
-    from olap_storage_engine_spark.fixtures import ingest_export
     from olap_storage_engine_spark.sources.ingest import read_binary_files
 
-    d = ingest_export(spark, sf_dir, "binary")
+    d = artifact_path(spark, sf_dir, "ingest_binary")
     df = read_binary_files(spark, d, glob="*.bin")
     return df.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)\.bin$", 1)
@@ -3208,10 +3137,9 @@ def q_ingest_segment_pushdown(spark, sf_dir):
     segment-open + zone-map read stack (src/segment.rs A2, A16, A18)
     as a Catalyst-planned source instead of a bespoke executor
     (sources/segment_format.py)."""
-    from olap_storage_engine_spark.fixtures import ingest_export
     from olap_storage_engine_spark.sources import segment_format
 
-    seg_path = ingest_export(spark, sf_dir, "olapseg")
+    seg_path = artifact_path(spark, sf_dir, "ingest_olapseg")
     segment_format.register(spark)
     df = (
         segment_format.read_segment_table(spark, seg_path)
@@ -3435,14 +3363,13 @@ def q_segment_point_lookup(spark, sf_dir):
     scheduled only for files that may actually hold a probed id; an
     absent probe (in-envelope, out-of-set) costs zero file bytes.
     Serving layout is the persisted range-partitioned fixture
-    (fixtures.segment_table_path); pruning is pinned by
+    (fixtures.ARTIFACTS["segtbl_dir"]); pruning is pinned by
     tests/test_segment_source.py::test_dir_point_lookup_prunes_by_bloom
     (sources/segment_format.py build_bloom, _dir_partitions)."""
-    from olap_storage_engine_spark.fixtures import segment_table_path
     from olap_storage_engine_spark.sources import segment_format
 
     segment_format.register(spark)
-    path = segment_table_path(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "segtbl_dir")
     return (
         segment_format.read_segment_table(spark, path)
         # three present ids spread across files + one absent probe
@@ -3553,7 +3480,6 @@ def q_segment_stream_read(spark, sf_dir):
     starts, and the aggregate is complete-mode)."""
     import uuid as _uuid
 
-    from olap_storage_engine_spark.fixtures import segment_table_path
     from olap_storage_engine_spark.sources import segment_format
     from olap_storage_engine_spark.streaming.events import (
         _await_or_raise,
@@ -3562,7 +3488,7 @@ def q_segment_stream_read(spark, sf_dir):
     )
 
     segment_format.register(spark)
-    path = segment_table_path(spark, sf_dir)
+    path = artifact_path(spark, sf_dir, "segtbl_dir")
     stream = spark.readStream.format("olapseg").option("path", path).load()
     name = f"segread_{_uuid.uuid4().hex[:8]}"
     with _shuffle_partitions(spark, 4):
@@ -3857,9 +3783,7 @@ def q_bucketed_join(spark, sf_dir):
     partitioning (plan pinned by tests/test_bucketed.py).  The merge
     hint forces the sort-merge path so the bucketed co-location (not a
     broadcast) is what's being exercised."""
-    from olap_storage_engine_spark.fixtures import bucketed_pair
-
-    o_name, c_name = bucketed_pair(spark, sf_dir)
+    o_name, c_name = artifact_path(spark, sf_dir, "bucketed_pair")
     o = spark.table(o_name)
     c = spark.table(c_name)
     return (
@@ -3880,9 +3804,7 @@ def q_bucketed_fact_join(spark, sf_dir):
     shuffle left is the final tiny top-k.  At 100 TB this is the
     workload's most expensive exchange removed; unlike the fact-dim
     pair, neither side could ever broadcast."""
-    from olap_storage_engine_spark.fixtures import bucketed_fact_pair
-
-    o_name, li_name = bucketed_fact_pair(spark, sf_dir)
+    o_name, li_name = artifact_path(spark, sf_dir, "bucketed_fact_pair")
     o = spark.table(o_name)
     li = spark.table(li_name)
     return (
@@ -4098,9 +4020,7 @@ def q_tpch_q18_bucketed(spark, sf_dir):
     shuffles are the query's entire data-movement cost.  Same result
     and oracle as tpch_q18; exchange shape pinned in
     tests/test_bucketed.py."""
-    from olap_storage_engine_spark.fixtures import bucketed_fact_pair
-
-    o_name, li_name = bucketed_fact_pair(spark, sf_dir)
+    o_name, li_name = artifact_path(spark, sf_dir, "bucketed_fact_pair")
     li = spark.table(li_name)
     o = spark.table(o_name)
     c = load_table(spark, sf_dir, "customer")
@@ -4214,74 +4134,67 @@ def q_set_intersect(spark, sf_dir):
 # The full set is additionally compared locally each round
 # (LOCALCHECK_r{N}.json, generated by tools/compare.py).
 _DRIVER_CHECK_HEAD = [
-    # Round-14 rotation (updated by the r14 OPTIMIZATION session).
-    # Priority order within the 50-slot head:
-    #   1-4   NEW this round, never driver-checked: corpus_prep_inline
-    #         (the cold-corpus pipeline twin, opt session),
-    #         text_lm_score_inline, text_bm25_indexed,
-    #         tpch_q18_bucketed (build session),
-    #   5-24  queries whose CODE or SERVING ARTIFACT changed in the
-    #         OPTIMIZATION session: the doc_stats-served corpus_prep
-    #         pair, the driver-side BPE trainer, the NB family (totals
-    #         restructure + persisted-weights eval; serve's model
-    #         artifact is built by the changed trainer), the seven
-    #         fused multimodal decodes + the two attach-recipe
-    #         consumers (resize, audio_resample), and the
-    #         explicit-schema segment reads,
-    #   25-40 queries changed in the BUILD session (index-served LM,
-    #         cluster-table trio, ANN truth/probe routing, shingle-
-    #         index schema consumers, stream near-dup, segment
-    #         block-read guards),
-    #   41-50 the next r8/r9-stale rows.
-    "corpus_prep_inline",
-    "text_lm_score_inline",
-    "text_bm25_indexed",
-    "tpch_q18_bucketed",
-    "corpus_prep",
-    "corpus_prep_provenance",
-    "tokenizer_train",
-    "quality_classifier_train",
-    "quality_classifier_train_eval",
-    "quality_classifier_serve",
-    "multimodal_decode",
-    "multimodal_png_decode",
-    "multimodal_audio_decode",
-    "multimodal_jpeg_decode",
-    "multimodal_gif_decode",
-    "multimodal_video_decode",
-    "multimodal_video_frame_sample",
-    "multimodal_resize",
-    "multimodal_audio_resample",
-    "segment_write_roundtrip",
-    "segment_stream_ingest",
-    "segment_compact",
-    "segment_delete_scoped",
-    "segment_stream_read",
-    "segment_point_lookup",
-    "ingest_segment_pushdown",
-    "text_lm_score",
+    # Artifact-registry rotation.  Priority order within the 50-slot
+    # head:
+    #   1-29  queries served from publish-time artifacts, whose reads
+    #         moved onto fixtures.ARTIFACTS (schema-given reads, the
+    #         pyarrow IVF router, per-format ingest exports, one
+    #         bucketed-pair build),
+    #   30-38 OlapTable readers (the _collapsed plan and the
+    #         schema-given _scan),
+    #   39-42 the lineitem_ship / lineitem_rt readers (timestamp
+    #         columns read at the spec's type),
+    #   43-49 LLM operators that spread single-split inputs,
+    #   50    time_travel_read, the anchor of the length assertion.
     "dedup_clusters",
+    "dedup_minhash",
+    "dedup_simhash_groups",
+    "dedup_ngram_indexed",
+    "dedup_minhash_verified",
+    "dedup_minhash_pr_eval",
     "dedup_cluster_stats",
     "dedup_keepset",
-    "ann_recall_eval",
-    "similarity_topk",
-    "similarity_ann_ivf",
-    "dsir_sample",
-    "dedup_ngram_indexed",
-    "gram_novelty",
     "dedup_exact_substring",
     "decontaminate_indexed",
     "decontamination_report",
-    "dedup_minhash",
-    "dedup_minhash_pr_eval",
+    "gram_novelty",
+    "dsir_sample",
+    "text_bm25_indexed",
+    "text_lm_score",
+    "corpus_prep",
+    "ann_recall_eval",
+    "similarity_ann_pq",
+    "similarity_ann_ivfpq",
+    "similarity_int8_topk",
+    "similarity_kmeans_centroids",
+    "quality_classifier_serve",
+    "quality_classifier_train_eval",
+    "dpp_join_prune",
+    "zorder_scan",
+    "embedding_outliers",
     "docs_stream_neardup_filter",
-    "pii_scrub",
-    "rollup_coarser_agg",
-    "scan_projection",
-    "set_union",
-    "shortkey_prefix_seek",
-    "snapshot_read_versions",
+    "ingest_csv",
+    "tpch_q7_bucketed",
+    "agg_model_sum",
+    "unique_key_latest",
+    "agg_model_replace",
+    "merge_scoped",
+    "schema_evolution_rename",
+    "delete_rows",
+    "repartition_read",
+    "rowset_skip_scan",
+    "bucket_point_lookup",
+    "filter_range_zonemap",
+    "write_read_roundtrip",
+    "scan_count",
+    "table_stats",
+    "text_langid",
+    "text_quality",
+    "text_repetition",
+    "embedding_neardup",
+    "similarity_hard_negatives",
     "text_chunking",
+    "multimodal_decode",
     "time_travel_read",
 ]
 # The head proper (everything before the fill marker) must stay within
@@ -4293,13 +4206,13 @@ assert _DRIVER_CHECK_HEAD.index("time_travel_read") == _HEAD_PROPER_LEN - 1, (
     "driver-check head proper must be exactly 50 entries; "
     f"anchor sits at index {_DRIVER_CHECK_HEAD.index('time_travel_read')}"
 )
-# ROUND-15 ROTATION RECIPE: after CORRECTNESS_r14 lands, lead with any
-# query still lacking a green row, then queries whose code changes in
-# r15, then the remaining r8-stale rows (tpch_q3, train_val_split,
-# udtf_parse_props, unique_key_latest, window_rank_family,
-# write_read_roundtrip), then the r9 cohort alphabetically, then the
-# r10 cohort as budget allows.  Keep the head proper at exactly 50
-# and update the assertion's anchor query.
+# ROTATION RECIPE: after the next driver correctness run lands, lead
+# with any query still lacking a green row, then queries whose code
+# changed since, then the stalest green rows (the r8-stale tpch_q3,
+# train_val_split, udtf_parse_props, window_rank_family, then the r9
+# cohort alphabetically, then the r10 cohort as budget allows).  Keep
+# the head proper at exactly 50 and update the assertion's anchor
+# query.
 _DRIVER_CHECK_TAIL: list[str] = []
 
 # The declared queries that run a Structured Streaming micro-batch

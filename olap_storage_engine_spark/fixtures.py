@@ -1,4 +1,5 @@
-"""Fixture OlapTables built from the driver test data.
+"""Fixture OlapTables and publish-time artifacts built from the driver
+test data.
 
 Each builder writes one engine table (spec + manifest + versioned
 Parquet) into a per-process warehouse, once per (sf_dir, table); the
@@ -9,14 +10,30 @@ collapse path, not a bare ``spark.read``.
 Version fixtures mirror the reference demo (examples/basic_usage.rs:
 222-283): multiple single-version rowsets, a compacted interval, and a
 hole case (tested in tests/, not in declared queries).
+
+Publish-time artifacts (index tables, trained models, interchange
+exports, managed bucketed tables) are declared once each, in
+``ARTIFACTS``: an entry's name is its warehouse directory and its cache
+key, and it lists the source tables whose files validate the cache and
+the build that writes it.  Readers go through ``artifact_path`` (build
+once, return what the build returned), ``read_artifact`` (a parquet
+artifact as a DataFrame, with the schema resolved once from a file
+footer and cached with the path, so reads launch no schema-inference
+job) and ``artifact_rows`` (driver-sized artifacts as tuples via
+pyarrow, no Spark job at all).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import tempfile
+import threading
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .sources.testdata import load_table
 from .spec import (
@@ -31,8 +48,6 @@ from .spec import (
     TableSpec,
 )
 from .table import OlapTable
-
-import threading
 
 _WAREHOUSE: dict[str, str] = {}
 _TABLES: dict[tuple[str, str], OlapTable] = {}
@@ -60,53 +75,28 @@ def get_table(spark: SparkSession, sf_dir: str, name: str) -> OlapTable:
 
 
 def build_all(spark: SparkSession, sf_dir: str, parallelism: int = 4) -> None:
-    """Build every fixture table, ``parallelism`` at a time — Spark's
-    scheduler runs jobs from separate driver threads concurrently, so
-    wall time is bounded by the largest tables, not the sum.
-
-    Also materializes the auxiliary index/interchange artifacts (IVF
-    centroid table, ingest export files, managed bucketed tables) so
-    queries — and the bench — time the serving path only; index
-    training and export writes are one-time build costs by design."""
+    """Build every fixture table and every ``ARTIFACTS`` entry,
+    ``parallelism`` at a time — Spark's scheduler runs jobs from
+    separate driver threads concurrently, so wall time is bounded by
+    the largest builds, not the sum.  Index training and export writes
+    are one-time build costs by design, so queries — and the bench —
+    time the serving path only.  A build that needs another table or
+    artifact calls its accessor; the per-key lock orders them."""
     from concurrent.futures import ThreadPoolExecutor
 
-    # the olapseg fixture builds SERIALLY before the pool: Python
+    # the olapseg artifact builds SERIALLY before the pool: Python
     # data-source resolution is main-thread-bound in this Spark (a
     # save() issued from a secondary py4j thread fails DATA_SOURCE_
     # NOT_FOUND even after re-registration) — every query-path olapseg
     # write runs on the driver main thread, so only build_all needs
     # this care
-    segment_table_path(spark, sf_dir)
+    artifact_path(spark, sf_dir, "segtbl_dir")
     # orders_rollup reads orders_agg: build dependencies first
     get_table(spark, sf_dir, "orders_agg")
-    aux = [
-        lambda: ivf_centroids(spark, sf_dir),
-        lambda: ingest_export(spark, sf_dir, "jsonl"),
-        lambda: ingest_export(spark, sf_dir, "csv"),
-        lambda: ingest_export(spark, sf_dir, "orc"),
-        lambda: ingest_export(spark, sf_dir, "binary"),
-        lambda: ingest_export(spark, sf_dir, "olapseg"),
-        lambda: bucketed_pair(spark, sf_dir),
-        lambda: bucketed_fact_pair(spark, sf_dir),
-        lambda: zorder_lineitem_path(spark, sf_dir),
-        lambda: lineitem_year_path(spark, sf_dir),
-        lambda: int8_codes_path(spark, sf_dir),
-        lambda: shingle_index_path(spark, sf_dir),
-        lambda: minhash_sigs_path(spark, sf_dir),
-        lambda: pq_index_paths(spark, sf_dir),
-        lambda: simhash_fps_path(spark, sf_dir),
-        lambda: doc_stats_path(spark, sf_dir),
-        lambda: nb_model_path(spark, sf_dir),
-        lambda: truth_pairs_path(spark, sf_dir),
-        lambda: ann_truth_path(spark, sf_dir),
-        lambda: ann_probes_path(spark, sf_dir),
-        lambda: neardup_clusters_path(spark, sf_dir),
-        lambda: bpe_merges_path(spark, sf_dir),
-    ]
     with ThreadPoolExecutor(max_workers=parallelism) as ex:
         tables = ex.map(lambda n: get_table(spark, sf_dir, n), _BUILDERS)
-        auxs = ex.map(lambda f: f(), aux)
-        list(tables), list(auxs)
+        arts = ex.map(lambda n: artifact_path(spark, sf_dir, n), ARTIFACTS)
+        list(tables), list(arts)
 
 
 # ---------------------------------------------------------------- orders
@@ -700,482 +690,6 @@ def _build_doc_postings(spark: SparkSession, sf_dir: str) -> OlapTable:
     return t
 
 
-# ------------------------------------------------------- aux artifacts
-# Non-OlapTable build outputs (index tables, interchange exports,
-# managed bucketed tables), cached per (kind, sf_dir) with the same
-# one-builder-per-artifact locking as the fixture tables.
-
-# one live entry per (kind, sf_dir); value = (source-table state,
-# built value).  The state tuple — (ino, mtime_ns, size) per declared
-# source parquet — VALIDATES the entry: a fixture table regenerated
-# mid-process (parquet writes replace files, so the inode always
-# moves) forces a rebuild instead of silently serving an index
-# derived from the previous corpus (r13 review; the generalization of
-# the streaming-decontamination hash-cache fix to every persisted
-# artifact).  Builders that declare no sources keep the old
-# build-once-per-process behavior (state=None).
-_AUX: dict[tuple[str, str], tuple] = {}
-
-
-def _src_state(sf_dir: str, names: tuple) -> tuple | None:
-    if not names:
-        return None
-    out = []
-    for nm in names:
-        p = os.path.join(sf_dir, f"{nm}.parquet")
-        try:
-            st = os.stat(p)
-        except OSError:
-            # a declared source missing at call time (e.g. an aux
-            # builder invoked before fixture generation) must fail
-            # with a message naming the fixture, not an opaque
-            # FileNotFoundError from a cache-key helper (r13 ADVICE)
-            raise FileNotFoundError(
-                f"aux builder source table '{nm}' is missing at {p} — "
-                "run fixtures.build_all (or the table's builder) for "
-                f"{sf_dir} before building this artifact"
-            ) from None
-        out.append((nm, st.st_ino, st.st_mtime_ns, st.st_size))
-    return tuple(out)
-
-
-def _aux_cached(kind: str, sf_dir: str, build, src_tables: tuple = ()):
-    key = (kind, sf_dir)
-    state = _src_state(sf_dir, src_tables)
-    with _META_LOCK:
-        hit = _AUX.get(key)
-        if hit is not None and hit[0] == state:
-            return hit[1]
-        lock = _LOCKS.setdefault(key, threading.Lock())
-    with lock:
-        hit = _AUX.get(key)
-        if hit is None or hit[0] != state:
-            _AUX[key] = (state, build())
-        return _AUX[key][1]
-
-
-def ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted IVF coarse-quantizer index: (cent_id, cent_vec),
-    trained ONCE per corpus by the deterministic sampled k-means
-    (operators/similarity.train_ivf_centroids) and stored as a tiny
-    parquet table in the warehouse — the reference's A15 materialized-
-    index idea applied to ANN serving.  Queries read the index; the
-    training job never runs inside a query plan.  Kept oracle-checkable
-    because training is deterministic: DuckDB re-derives bit-identical
-    centroids from the same corpus (the per-iteration mean rounding
-    absorbs float-summation order)."""
-
-    return spark.read.parquet(_ivf_centroids_path(spark, sf_dir))
-
-
-def _ivf_centroids_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once path of the centroid index parquet (via _aux_cached,
-    so callers never index _AUX directly)."""
-
-    def build():
-        from .operators.similarity import train_ivf_centroids
-
-        path = os.path.join(warehouse_for(sf_dir), "ivf_centroids")
-        emb = load_table(spark, sf_dir, "embeddings")
-        train_ivf_centroids(emb).write.mode("overwrite").parquet(path)
-        return path
-
-    return _aux_cached("ivf_centroids", sf_dir, build, ("embeddings",))
-
-
-def bpe_merges_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once path of the persisted BPE merge table — the
-    tokenizer artifact every training pipeline versions alongside its
-    corpus: trained ONCE per publish (operators/text.bpe_train, the
-    deterministic 6-merge recipe), stored as a k-row parquet; encode
-    queries load it driver-side and never retrain.  Oracle-checkable
-    because training is deterministic — DuckDB re-derives the
-    identical table from the same corpus."""
-
-    def build():
-        from .operators.text import bpe_train
-
-        path = os.path.join(warehouse_for(sf_dir), "bpe_merges")
-        docs = load_table(spark, sf_dir, "documents")
-        bpe_train(docs, k=6).write.mode("overwrite").parquet(path)
-        return path
-
-    return _aux_cached("bpe_merges", sf_dir, build, ("documents",))
-
-
-def bpe_merges_rows(spark: SparkSession, sf_dir: str) -> list:
-    """The merge table as rank-ordered driver-resident (lhs, rhs)
-    pairs — the form an encoder holds it in (k tuples in memory).
-    Read via pyarrow straight from the index parquet: resolving the
-    merge list must not cost a distributed job."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    path = bpe_merges_path(spark, sf_dir)
-    tbl = pq.read_table(sorted(glob.glob(os.path.join(path, "*.parquet"))))
-    rows = sorted(
-        zip(
-            tbl.column("rank").to_pylist(),
-            tbl.column("lhs").to_pylist(),
-            tbl.column("rhs").to_pylist(),
-        )
-    )
-    return [(lhs, rhs) for _, lhs, rhs in rows]
-
-
-def ivf_centroids_rows(spark: SparkSession, sf_dir: str) -> list:
-    """The centroid index as driver-resident rows — the form an ANN
-    query router actually holds it in (a handful of (cent_id,
-    cent_vec) tuples in memory).  Read via pyarrow straight from the
-    index parquet: resolving a probe's cells must not cost a
-    distributed job."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    path = _ivf_centroids_path(spark, sf_dir)
-    tbl = pq.read_table(sorted(glob.glob(os.path.join(path, "*.parquet"))))
-    return sorted(
-        zip(tbl["cent_id"].to_pylist(), tbl["cent_vec"].to_pylist())
-    )
-
-
-def truth_pairs_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once EXACT-Jaccard truth pair set (n=3 shingles,
-    jaccard >= 0.4, df <= 50): a constant of (corpus, n, threshold) —
-    the ground truth every LSH-parameter evaluation compares against —
-    persisted at publish time like every other index artifact, so the
-    evaluator READS the pair set instead of re-expanding the shingle
-    co-occurrence pairs (the eval's dominant cost) on every run.
-    Oracle-checkable because the derivation is deterministic: DuckDB
-    re-derives the identical pair set from the same corpus."""
-
-    def build():
-        from .operators import dedup as dd
-
-        path = os.path.join(warehouse_for(sf_dir), "truth_pairs_n3")
-        idx3 = (
-            spark.read.parquet(shingle_index_path(spark, sf_dir))
-            .filter(F.col("n") == 3)
-            .select("doc_id", "sz", "sh")
-        )
-        (
-            dd.ngram_pairs_from_index(idx3, threshold=0.4, max_doc_freq=50)
-            .coalesce(1)  # truth pairs are sparse; one file, one task
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return _aux_cached("truth_pairs_n3", sf_dir, build, ("documents",))
-
-
-def neardup_clusters_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once near-dup CLUSTER TABLE (doc_id, cluster_id;
-    cluster_id = lowest member id, the elected canonical) — the
-    publish-time resolution of the banded-LSH candidate graph, stored
-    next to the signature index it derives from.  The cluster-serving
-    queries (dedup_clusters / dedup_keepset / dedup_cluster_stats)
-    READ this table instead of re-running the iterative
-    connected-components closure per query; on new publishes the
-    table delta-refreshes through dedup.cluster_delta_refresh
-    (contract the delta pairs through existing assignments — handles
-    cluster MERGES; refresh ≡ rebuild pinned in tests).  At 100 TB
-    cluster assignment is exactly as recomputable as the signature
-    index itself: once per publish, amortized over every serve."""
-
-    def build():
-        from .operators import dedup as dd
-
-        path = os.path.join(warehouse_for(sf_dir), "neardup_clusters")
-        sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
-        # band over the signature table's OWN build params — a raised
-        # _MINHASH_SIGS_NUM_HASHES must widen the banding here too,
-        # not silently cluster on half the signature (r14 review)
-        num_hashes, _ = minhash_sigs_build_params()
-        pairs = dd.minhash_candidates_from_sigs(
-            sigs, num_hashes=num_hashes, band_rows=dd.MH_BAND_ROWS
-        )
-        (
-            dd.connected_components(pairs)
-            .select(
-                F.col("id").alias("doc_id"),
-                F.col("component").alias("cluster_id"),
-            )
-            .coalesce(1)  # clustered docs are sparse; one file
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return _aux_cached("neardup_clusters", sf_dir, build, ("documents",))
-
-
-def ann_probes_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted STANDARD PROBE SET (vec_id, embedding; the
-    n lowest vec_ids — similarity.standard_probes): eval-sized by
-    contract, stored next to ann_truth_k10 so the ANN query router
-    can hold it driver-resident without a distributed job.  At 100 TB
-    the probe set is still 5 rows — reading it via pyarrow is the
-    same discipline as ivf_centroids_rows; deriving it per query with
-    a corpus orderBy+limit COLLECT was one whole Spark job per IVF
-    serve (r14)."""
-
-    def build():
-        from .operators.similarity import standard_probes
-
-        path = os.path.join(warehouse_for(sf_dir), "ann_probes")
-        emb = load_table(spark, sf_dir, "embeddings")
-        (
-            standard_probes(emb)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return _aux_cached("ann_probes", sf_dir, build, ("embeddings",))
-
-
-def standard_probe_rows(spark: SparkSession, sf_dir: str) -> list:
-    """The standard probe set as driver-resident (vec_id, embedding)
-    rows — the form ivf_probe_cells_local consumes.  Pyarrow read of
-    the persisted probe artifact, zero Spark jobs; pinned equal to
-    similarity.standard_probes by test (the two cannot share code —
-    one is a DataFrame plan, one a local read — so the test IS the
-    shared definition)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    path = ann_probes_path(spark, sf_dir)
-    tbl = pq.read_table(sorted(glob.glob(os.path.join(path, "*.parquet"))))
-    return sorted(
-        zip(tbl["vec_id"].to_pylist(), tbl["embedding"].to_pylist())
-    )
-
-
-def ann_truth_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once EXACT brute-force cosine top-10 of the standard
-    probe set against the corpus — the ground truth every ANN
-    recall evaluation compares the served index against.  A constant
-    of (corpus, probes, k), so it persists at index-publish time like
-    truth_pairs_n3: the evaluator READS k-rows-per-probe instead of
-    paying the full corpus scan + per-probe ranking (the eval's
-    dominant cost) on every run.  At 100 TB this is the only sane
-    shape — the truth job is one offline pass per corpus publish,
-    amortized over every recall check the index serves thereafter.
-    Oracle-checkable because brute_topk is deterministic (rank ties
-    broken by vec_id; cosine rounded 6dp)."""
-
-    def build():
-        from .operators.similarity import (
-            ANN_EVAL_K,
-            brute_topk,
-            standard_probes,
-        )
-
-        path = os.path.join(warehouse_for(sf_dir), "ann_truth_k10")
-        emb = load_table(spark, sf_dir, "embeddings")
-        (
-            brute_topk(emb, standard_probes(emb), k=ANN_EVAL_K)
-            .coalesce(1)  # k*probes rows — one file, one task
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        return path
-
-    return _aux_cached("ann_truth_k10", sf_dir, build, ("embeddings",))
-
-
-def segment_table_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once directory segment table (the distributed olapseg
-    write layout): documents range-partitioned 8 ways on doc_id, so
-    the manifest carries 8 contiguous per-file zone maps PLUS per-file
-    doc_id bloom filters — the serving layout for point lookups
-    (A17/A18 at the foreign-format boundary).  Point-probe queries
-    read this; the write job never runs inside a query plan."""
-
-    def build():
-        from .sources.segment_format import register
-
-        register(spark)
-        path = os.path.join(warehouse_for(sf_dir), "segtbl_dir")
-        (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", "n_chars", "lang", "source")
-            .repartitionByRange(8, "doc_id")
-            .write.format("olapseg")
-            .option("path", path)
-            .mode("overwrite")
-            .save()
-        )
-        return path
-
-    return _aux_cached("segment_table_dir", sf_dir, build, ("documents",))
-
-
-def ingest_export(spark: SparkSession, sf_dir: str, fmt: str) -> str:
-    """One-time per (sf_dir, fmt) export of a source table to a text/
-    columnar interchange format (jsonl/csv/orc) — build-time setup for
-    the ingest_* queries, so their timings measure the READ path, not a
-    first-call export write."""
-
-    def build():
-        path = os.path.join(warehouse_for(sf_dir), f"ingest_{fmt}")
-        if fmt == "jsonl":
-            load_table(spark, sf_dir, "documents").write.mode(
-                "overwrite"
-            ).json(path)
-        elif fmt == "csv":
-            load_table(spark, sf_dir, "orders").write.mode(
-                "overwrite"
-            ).option("header", "true").option("escape", '"').csv(path)
-        elif fmt == "orc":
-            load_table(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
-            ).write.mode("overwrite").orc(path)
-        elif fmt == "olapseg":
-            # one custom binary segment (sources/segment_format.py):
-            # the documents table in the bespoke block format the
-            # olapseg DataSource mounts with zone-map pushdown —
-            # encoded through the same Arrow/numpy batch path the
-            # distributed writer uses (r12: was a collect loop)
-            import pyarrow as pa
-
-            from .sources.segment_format import write_segment_batches
-
-            os.makedirs(path, exist_ok=True)
-            pdf = (
-                load_table(spark, sf_dir, "documents")
-                .select("doc_id", "n_chars", "lang", "source")
-                .toPandas()
-            )
-            path = os.path.join(path, "documents.oseg")
-            write_segment_batches(
-                [pa.RecordBatch.from_pandas(pdf)], path, block_rows=256
-            )
-        elif fmt == "binary":
-            # loose-file corpus for the binaryFile source: the first 64
-            # documents' UTF-8 bytes, one file each, named by doc_id.
-            # Driver-side loop is fixture-build only (64 tiny files);
-            # real corpora arrive as files already.
-            os.makedirs(path, exist_ok=True)
-            rows = (
-                load_table(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < 64)
-                .select("doc_id", "text")
-                .collect()
-            )
-            for r in rows:
-                fp = os.path.join(path, f"doc_{r['doc_id']:05d}.bin")
-                with open(fp, "wb") as fh:
-                    fh.write(r["text"].encode("utf-8"))
-        else:
-            raise ValueError(f"unknown ingest format: {fmt}")
-        return path
-
-    return _aux_cached(f"ingest_{fmt}", sf_dir, build, ("documents",))
-
-
-def bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Managed Spark bucketed tables for the co-located join path:
-    orders and customer both ``bucketBy(8, custkey)`` + sorted, so an
-    equi-join on custkey is storage-partitioned — NEITHER side
-    shuffles (zero Exchange in the plan; pinned by tests/test_bucketed
-    .py).  This is the managed-table complement to the engine's own
-    __bk FNV bucketing (which Catalyst can't see through plain
-    ``spark.read.parquet``): join-heavy pairs get registered through
-    the session catalog where the bucket spec IS visible to the
-    planner.  At 100 TB this removes the single largest avoidable
-    shuffle — both sides of every fact-dim co-bucketed join.
-
-    Returns the two qualified table names.  Rebuilt per session when
-    the in-memory catalog lost the bucket spec (files alone don't
-    carry it)."""
-    import re as _re
-
-    tag = _re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/")))
-    db = f"bkt_{tag}"
-    names = (f"{db}.orders_by_custkey", f"{db}.customer_by_custkey")
-
-    def build():
-        loc = os.path.join(warehouse_for(sf_dir), "bucketed_db")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-        o = load_table(spark, sf_dir, "orders")
-        (
-            # repartition on the bucket key first: ONE sorted file per
-            # bucket, the invariant that lets the sorted-bucket-scan
-            # conf (session.py) elide SMJ sorts soundly
-            o.repartition(8, "o_custkey").write.bucketBy(8, "o_custkey")
-            .sortBy("o_custkey")
-            .format("parquet")
-            .mode("overwrite")
-            .saveAsTable(names[0])
-        )
-        c = load_table(spark, sf_dir, "customer")
-        (
-            c.repartition(8, "c_custkey").write.bucketBy(8, "c_custkey")
-            .sortBy("c_custkey")
-            .format("parquet")
-            .mode("overwrite")
-            .saveAsTable(names[1])
-        )
-        return names
-
-    # the bucket spec lives in the session catalog; a new session must
-    # re-register even when the cache dict survived (tests share one
-    # process but may cycle sessions).  Check BOTH names: a partial
-    # drop/interrupted registration must not be trusted.
-    if not all(spark.catalog.tableExists(n) for n in names):
-        with _META_LOCK:
-            _AUX.pop(("bucketed_pair", sf_dir), None)
-    return _aux_cached("bucketed_pair", sf_dir, build, ("orders", "customer"))
-
-
-def bucketed_fact_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Managed bucketed tables for the FACT-to-FACT co-located join:
-    orders and lineitem both ``bucketBy(16, orderkey)`` + sorted.  The
-    fact-dim case (bucketed_pair) could fall back to a broadcast at
-    dim-sized inputs — this pair can't: at 100 TB BOTH sides are huge,
-    the orderkey shuffle of lineitem is the single most expensive
-    exchange in the whole TPC-H-shaped workload, and co-bucketing is
-    the only way to remove it.  Returns the two qualified names."""
-    import re as _re
-
-    tag = _re.sub(r"[^0-9A-Za-z]", "_", os.path.basename(sf_dir.rstrip("/")))
-    db = f"bkt_{tag}"
-    names = (f"{db}.orders_by_orderkey", f"{db}.lineitem_by_orderkey")
-
-    def build():
-        loc = os.path.join(warehouse_for(sf_dir), "bucketed_db")
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
-        o = load_table(spark, sf_dir, "orders")
-        (
-            # one sorted file per bucket (see bucketed_pair note)
-            o.repartition(16, "o_orderkey").write.bucketBy(16, "o_orderkey")
-            .sortBy("o_orderkey")
-            .format("parquet")
-            .mode("overwrite")
-            .saveAsTable(names[0])
-        )
-        li = load_table(spark, sf_dir, "lineitem")
-        (
-            li.repartition(16, "l_orderkey").write.bucketBy(16, "l_orderkey")
-            .sortBy("l_orderkey")
-            .format("parquet")
-            .mode("overwrite")
-            .saveAsTable(names[1])
-        )
-        return names
-
-    if not all(spark.catalog.tableExists(n) for n in names):
-        with _META_LOCK:
-            _AUX.pop(("bucketed_fact_pair", sf_dir), None)
-    return _aux_cached("bucketed_fact_pair", sf_dir, build, ("orders", "lineitem"))
-
-
 def _build_orders_merge(spark: SparkSession, sf_dir: str) -> OlapTable:
     """MERGE INTO fixture: UNIQUE-model orders, one deterministic merge
     applied through the copy-on-write rewrite — every 7th order updated
@@ -1353,8 +867,10 @@ def _build_emb_cells(spark: SparkSession, sf_dir: str) -> OlapTable:
     from .operators.similarity import ivf_cell_assign
 
     ev = get_table(spark, sf_dir, "embeddings_ver")
-    cents = ivf_centroids(spark, sf_dir)
-    cent_ids = sorted(r["cent_id"] for r in cents.select("cent_id").collect())
+    cents = read_artifact(spark, sf_dir, "ivf_centroids")
+    cent_ids = sorted(
+        c for c, in artifact_rows(spark, sf_dir, "ivf_centroids", ("cent_id",))
+    )
     spec = TableSpec(
         name="emb_cells",
         columns=[
@@ -1384,10 +900,11 @@ def _build_emb_cells_pq(spark: SparkSession, sf_dir: str) -> OlapTable:
     from .operators.similarity import ivf_cell_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = ivf_centroids(spark, sf_dir)
-    cent_ids = sorted(r["cent_id"] for r in cents.select("cent_id").collect())
-    _, codes_path = pq_index_paths(spark, sf_dir)
-    codes = spark.read.parquet(codes_path)
+    cents = read_artifact(spark, sf_dir, "ivf_centroids")
+    cent_ids = sorted(
+        c for c, in artifact_rows(spark, sf_dir, "ivf_centroids", ("cent_id",))
+    )
+    codes = read_artifact(spark, sf_dir, "pq_codes")
     spec = TableSpec(
         name="emb_cells_pq",
         columns=[
@@ -1518,233 +1035,6 @@ def _build_orders_ranges(spark: SparkSession, sf_dir: str) -> OlapTable:
     )
     t.write(o.filter(F.col("o_orderkey") > cut2))
     return t
-
-
-def pq_index_paths(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build-once (codebooks, codes) parquet paths for the PQ index:
-    per-subspace deterministic k-means codebooks plus every corpus
-    vector's m-byte code row — the compressed representation a 100 TB
-    deployment scans INSTEAD of raw vectors.  Training and encoding
-    run at fixture-build time; queries only read."""
-
-    def build():
-        from .operators.similarity import pq_encode, train_pq_codebooks
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        cb_path = os.path.join(warehouse_for(sf_dir), "pq_codebooks")
-        train_pq_codebooks(emb).write.mode("overwrite").parquet(cb_path)
-        cb = spark.read.parquet(cb_path)
-        codes_path = os.path.join(warehouse_for(sf_dir), "pq_codes")
-        pq_encode(emb, cb).write.mode("overwrite").parquet(codes_path)
-        return (cb_path, codes_path)
-
-    return _aux_cached("pq_index", sf_dir, build, ("embeddings",))
-
-
-def int8_codes_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted int8 CODES table (vec_id, codes) — the
-    publish-time half of the scalar-quantization storage cut: the
-    corpus is encoded once per publish (operators/similarity.
-    int8_quantize) and serving scans 4x-smaller integer codes, never
-    the float vectors.  Delta refresh = encode new rowsets with the
-    frozen published scales (scale drift forces a rebuild)."""
-
-    def build():
-        from .operators.similarity import int8_quantize
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = os.path.join(warehouse_for(sf_dir), "int8_codes")
-        int8_quantize(emb).select("vec_id", "codes").write.mode(
-            "overwrite"
-        ).parquet(path)
-        return path
-
-    return _aux_cached("int8_codes", sf_dir, build, ("embeddings",))
-
-
-def lineitem_year_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once ship-year-partitioned lineitem export (directory per
-    ``l_year``) — the fact-side layout for the dynamic-partition-
-    pruning query: a join keyed on the partition column lets Spark
-    inject the dim side's matching years as a runtime PartitionFilter
-    (``dynamicpruning`` subquery), so the fact scan lists only the
-    surviving year directories — the TPC-DS date_dim pattern."""
-
-    def build():
-        li = load_table(spark, sf_dir, "lineitem")
-        path = os.path.join(warehouse_for(sf_dir), "lineitem_year")
-        li.withColumn(
-            "l_year", F.year(F.col("l_shipdate").cast("date")).cast("int")
-        ).write.mode("overwrite").partitionBy("l_year").parquet(path)
-        return path
-
-    return _aux_cached("lineitem_year", sf_dir, build, ("lineitem",))
-
-
-def shingle_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted shingle index (doc_id, n, sz, sh, mh) — the
-    publish-time materialization of the dedup family's shared
-    substrate (the tokenize/shingle/hash pass), so serving-path dedup
-    starts at the posting-list aggregate.  Same maintenance story as
-    doc_postings: refresh by shingling only delta rowsets.
-
-    Four shingle widths (``n`` = 1, 2, 3, 5) and two hash columns live
-    in the one index: ``sh`` = xxhash64 drives n-gram Jaccard posting
-    lists AND the DSIR unigram+bigram feature space (widths 1/2),
-    ``mh`` = md5int % MINHASH_P is the minhash affine family's base
-    hash — so the near-dup variants and importance-resampling serve
-    from the same publish-time pass with their declared semantics (and
-    oracles) unchanged.
-
-    LIST-partitioned by ``n`` (one directory per width), so every
-    consumer's ``n == k`` filter is a partition PRUNE — a width-3
-    reader never lists, let alone scans, the width-1/2/5 files — the
-    same layout discipline as the IVF cell table."""
-
-    def build():
-        from .operators.indexes import shingle_rows_from
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = os.path.join(warehouse_for(sf_dir), "shingle_index")
-        # Size index files to a ROW TARGET (~100k docs ≈ 4M gram rows
-        # ≈ tens of MB per file), not to the writer's input
-        # parallelism: inheriting the scan's partitioning wrote 32
-        # ~100 KiB files per width at sf0.1, and every index consumer
-        # then scheduled 32 near-empty tasks per scan.  The (n,
-        # doc-bucket) repartition keeps each width's files at the
-        # target size at ANY corpus scale — more docs, more files,
-        # same bytes per task.
-        files_per_width = max(1, docs.count() // 100_000)
-        shingle_rows_from(docs).repartition(
-            files_per_width,
-            F.col("n"),
-            F.pmod(F.xxhash64("doc_id"), F.lit(files_per_width)),
-        ).write.mode("overwrite").partitionBy("n").parquet(path)
-        return path
-
-    return _aux_cached("shingle_index", sf_dir, build, ("documents",))
-
-
-# the FIXED parameter set the persisted signature index is built with
-# — consumers that probe its buckets (the streaming near-dup filter)
-# validate against this instead of silently mismatching keys
-_MINHASH_SIGS_NUM_HASHES = 8
-_MINHASH_SIGS_N = 3
-
-
-def minhash_sigs_build_params() -> tuple[int, int]:
-    """(num_hashes, shingle width n) the persisted signature index is
-    built with — the contract a probe-side consumer must match."""
-    return (_MINHASH_SIGS_NUM_HASHES, _MINHASH_SIGS_N)
-
-
-def minhash_sigs_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted minhash SIGNATURE table (doc_id, mh0..mh7)
-    over the declared parameter set (8 hashes, n=3 shingles) — one
-    groupBy over the shingle index at publish time, so the serving-path
-    candidate query is bands -> bucket self-join -> distinct with no
-    per-run signature aggregate at all.  Signatures are per-doc and
-    corpus-independent, so delta refresh = sign only the delta rowsets
-    and append (same story as pq_codes / ivf cells)."""
-
-    def build():
-        from .operators.dedup import minhash_signatures_from_index
-
-        idx = (
-            spark.read.parquet(shingle_index_path(spark, sf_dir))
-            .filter(F.col("n") == _MINHASH_SIGS_N)
-            .select("doc_id", "mh")
-        )
-        path = os.path.join(warehouse_for(sf_dir), "minhash_sigs")
-        minhash_signatures_from_index(
-            idx, num_hashes=_MINHASH_SIGS_NUM_HASHES
-        ).write.mode("overwrite").parquet(path)
-        return path
-
-    return _aux_cached("minhash_sigs", sf_dir, build, ("documents",))
-
-
-def simhash_fps_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted simhash FINGERPRINT table (doc_id, simhash)
-    — the third member of the publish-time dedup-index family
-    (shingle index, minhash signatures, simhash fingerprints).
-    Fingerprints are per-doc and corpus-independent, so delta refresh
-    = fingerprint only the delta rowsets and append."""
-
-    def build():
-        from .operators.dedup import simhash
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = os.path.join(warehouse_for(sf_dir), "simhash_fps")
-        simhash(docs, bits=32).write.mode("overwrite").parquet(path)
-        return path
-
-    return _aux_cached("simhash_fps", sf_dir, build, ("documents",))
-
-
-def doc_stats_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once persisted per-document CURATION-STATS table — the
-    fourth member of the publish-time dedup/curation-index family
-    (shingle index, minhash signatures, simhash fingerprints, doc
-    stats): every column is a pure per-document function of the text
-    (quality features + language ID via operators/text.enrich — the
-    SAME operator the inline pipeline runs, so values are identical by
-    construction — plus the ws/BPE-ish token counts and the exact-dedup
-    sha256), with the text itself dropped.  ~50 narrow bytes per doc.
-
-    This is the optimization-guide §8 "decide with small rows" shape:
-    the curation pipeline's decisions (quality filter, exact dedup,
-    near-dup keepset, token budget roll-ups) depend only on these
-    scalars, never on the text bytes, so a pipeline serving from this
-    table scans the heavy text exactly once — at publish — and each
-    run moves ~50 B/doc instead of the corpus.  Delta refresh = score
-    only the delta rowsets and append (per-doc, corpus-independent,
-    same story as simhash_fps / minhash_sigs)."""
-
-    def build():
-        from .operators.text import enrich, token_counts
-
-        docs = load_table(spark, sf_dir, "documents")
-        path = os.path.join(warehouse_for(sf_dir), "doc_stats")
-        stats = token_counts(enrich(docs)).select(
-            "doc_id",
-            "lang",
-            "source",
-            "n_chars",
-            "n_tokens",
-            "n_punct",
-            "n_stopwords",
-            "mean_token_len",
-            "quality",
-            "pred_lang",
-            "ws_tokens",
-            "bpe_tokens",
-            F.sha2(F.col("text"), 256).alias("text_sha"),
-        )
-        stats.write.mode("overwrite").parquet(path)
-        return path
-
-    return _aux_cached("doc_stats", sf_dir, build, ("documents",))
-
-
-def zorder_lineitem_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once path of the Z-order-clustered lineitem copy
-    (clustered on (l_partkey, l_suppkey)) — the write-path layout
-    transform; readers scan it like any parquet table and rely on
-    row-group stats for 2-D box pruning."""
-
-    def build():
-        from .operators.clustering import zorder_write
-
-        path = os.path.join(warehouse_for(sf_dir), "lineitem_zorder")
-        zorder_write(
-            load_table(spark, sf_dir, "lineitem"),
-            path,
-            ["l_partkey", "l_suppkey"],
-        )
-        return path
-
-    return _aux_cached("zorder_lineitem", sf_dir, build, ("lineitem",))
 
 
 def _build_events_qsketch(spark: SparkSession, sf_dir: str) -> OlapTable:
@@ -2070,31 +1360,613 @@ _BUILDERS = {
 }
 
 
-def nb_model_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once path of the persisted NB quality-model weights
-    (bucket, weight; bucket=-1 is the prior) — trained ONCE per corpus
-    on the learnable token-presence label by
-    operators/text.naive_bayes_train_hashed and stored as a tiny
-    parquet table, the model-registry artifact the serving query
-    broadcasts.  Oracle-checkable because training is closed-form and
-    exact-decimal: DuckDB re-derives identical weights from the same
-    corpus."""
+# ------------------------------------------------ publish-time artifacts
+# Non-OlapTable build outputs (index tables, models, interchange
+# exports, managed bucketed tables), each declared once in ARTIFACTS
+# and cached per (name, sf_dir) with the same one-builder-per-key
+# locking as the fixture tables.
+
+# one live entry per (kind, sf_dir); value = (source-table state,
+# built value).  The state tuple — (ino, mtime_ns, size) per declared
+# source parquet — VALIDATES the entry: a fixture table regenerated
+# mid-process (parquet writes replace files, so the inode always
+# moves) forces a rebuild instead of silently serving an index
+# derived from the previous corpus (r13 review; the generalization of
+# the streaming-decontamination hash-cache fix to every persisted
+# artifact).  Builders that declare no sources keep the old
+# build-once-per-process behavior (state=None).
+_AUX: dict[tuple[str, str], tuple] = {}
+
+
+def _src_state(sf_dir: str, names: tuple) -> tuple | None:
+    if not names:
+        return None
+    out = []
+    for nm in names:
+        p = os.path.join(sf_dir, f"{nm}.parquet")
+        try:
+            st = os.stat(p)
+        except OSError:
+            # a declared source missing at call time (e.g. an aux
+            # builder invoked before fixture generation) must fail
+            # with a message naming the fixture, not an opaque
+            # FileNotFoundError from a cache-key helper (r13 ADVICE)
+            raise FileNotFoundError(
+                f"aux builder source table '{nm}' is missing at {p} — "
+                "run fixtures.build_all (or the table's builder) for "
+                f"{sf_dir} before building this artifact"
+            ) from None
+        out.append((nm, st.st_ino, st.st_mtime_ns, st.st_size))
+    return tuple(out)
+
+
+def _aux_cached(kind: str, sf_dir: str, build, src_tables: tuple = ()):
+    key = (kind, sf_dir)
+    state = _src_state(sf_dir, src_tables)
+    with _META_LOCK:
+        hit = _AUX.get(key)
+        if hit is not None and hit[0] == state:
+            return hit[1]
+        lock = _LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        hit = _AUX.get(key)
+        if hit is None or hit[0] != state:
+            _AUX[key] = (state, build())
+        return _AUX[key][1]
+
+
+@dataclass(eq=False)
+class _Built:
+    """The _AUX value of a registry artifact: what its build returned
+    and, once read_artifact has resolved it, the Spark schema of its
+    parquet files.  Both live in one value, so the rebuild a source
+    change forces drops the schema together with the path."""
+
+    value: object
+    schema: StructType | None = None
+
+
+@dataclass(frozen=True)
+class Artifact:
+    """One publish-time artifact.  ``sources`` are the fixture tables
+    it derives from (the _src_state key that validates its cache
+    entry); ``build(spark, sf_dir, directory)`` writes it under the
+    warehouse directory it is given and returns what readers use: that
+    directory, a file in it, or catalog table names.  ``directory`` is
+    set only where two artifacts share one; ``lost(spark, value)`` says
+    a cached value no longer resolves in this session."""
+
+    sources: tuple[str, ...]
+    build: Callable[[SparkSession, str, str], object]
+    directory: str | None = None
+    lost: Callable[[SparkSession, object], bool] | None = None
+
+
+def _cached_artifact(spark: SparkSession, sf_dir: str, name: str) -> _Built:
+    art = ARTIFACTS[name]
+    path = os.path.join(warehouse_for(sf_dir), art.directory or name)
 
     def build():
-        from pyspark.sql import functions as F
+        return _Built(art.build(spark, sf_dir, path))
 
-        from .operators.text import naive_bayes_train_hashed
+    b = _aux_cached(name, sf_dir, build, art.sources)
+    if art.lost is not None and art.lost(spark, b.value):
+        with _META_LOCK:
+            _AUX.pop((name, sf_dir), None)
+        b = _aux_cached(name, sf_dir, build, art.sources)
+    return b
 
-        path = os.path.join(warehouse_for(sf_dir), "nb_model")
-        docs = load_table(spark, sf_dir, "documents").withColumn(
-            "__lbl",
-            F.when(
-                F.array_contains(F.split("text", " "), "spark"), "pos"
-            ).otherwise("neg"),
-        )
-        naive_bayes_train_hashed(
-            docs, label_col="__lbl", positive="pos"
-        ).write.mode("overwrite").parquet(path)
-        return path
 
-    return _aux_cached("nb_model", sf_dir, build, ("documents",))
+def artifact_path(spark: SparkSession, sf_dir: str, name: str):
+    """Build the artifact ``name`` once per (sf_dir, source state) and
+    return what its build returned."""
+    return _cached_artifact(spark, sf_dir, name).value
+
+
+def read_artifact(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The parquet artifact ``name`` as a DataFrame, read with the
+    schema resolved on its first read: no schema-inference job."""
+    b = _cached_artifact(spark, sf_dir, name)
+    if b.schema is None:
+        b.schema = _parquet_schema(spark, b.value)
+    return spark.read.schema(b.schema).parquet(b.value)
+
+
+def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers, without its
+    inference job: the data columns from the Spark row schema Spark
+    wrote into one file's footer (read on the driver), the partition
+    columns from Spark's own listing of the directory."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    first = min(
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+    meta = pq.read_schema(first).metadata[
+        b"org.apache.spark.sql.parquet.row.metadata"
+    ]
+    data = StructType.fromJson(json.loads(meta))
+    return spark.read.schema(data).parquet(path).schema
+
+
+def artifact_rows(
+    spark: SparkSession, sf_dir: str, name: str, cols: tuple[str, ...]
+) -> list[tuple]:
+    """The parquet artifact ``name``'s ``cols`` as driver-resident
+    tuples, read by pyarrow straight from its files — the form a
+    driver-sized artifact (a merge table, a centroid index, a probe
+    set) is held in, resolved without a Spark job."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    path = artifact_path(spark, sf_dir, name)
+    tbl = pq.read_table(
+        sorted(glob.glob(os.path.join(path, "*.parquet"))), columns=list(cols)
+    )
+    return list(zip(*(tbl[c].to_pylist() for c in cols)))
+
+
+def bpe_merges_path(spark: SparkSession, sf_dir: str) -> str:
+    """The built ``bpe_merges`` directory (kept under this name for
+    callers that trace the artifact build)."""
+    return artifact_path(spark, sf_dir, "bpe_merges")
+
+
+def bpe_merges_rows(spark: SparkSession, sf_dir: str) -> list:
+    """The merge table as rank-ordered driver-resident (lhs, rhs)
+    pairs — the form an encoder holds it in (k tuples in memory)."""
+    bpe_merges_path(spark, sf_dir)  # the build, under its traced name
+    rows = artifact_rows(spark, sf_dir, "bpe_merges", ("rank", "lhs", "rhs"))
+    return [(lhs, rhs) for _, lhs, rhs in sorted(rows)]
+
+
+# the FIXED parameter set the persisted signature index is built with
+# — consumers that probe its buckets (the streaming near-dup filter)
+# validate against this instead of silently mismatching keys
+_MINHASH_SIGS_NUM_HASHES = 8
+_MINHASH_SIGS_N = 3
+
+
+def minhash_sigs_build_params() -> tuple[int, int]:
+    """(num_hashes, shingle width n) the persisted signature index is
+    built with — the contract a probe-side consumer must match."""
+    return (_MINHASH_SIGS_NUM_HASHES, _MINHASH_SIGS_N)
+
+
+def _save(df: DataFrame, path: str) -> str:
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _write_segtbl_dir(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Directory segment table (the distributed olapseg write layout):
+    documents range-partitioned 8 ways on doc_id, so the manifest
+    carries 8 contiguous per-file zone maps PLUS per-file doc_id bloom
+    filters — the serving layout for point lookups (A17/A18 at the
+    foreign-format boundary).  build_all writes it on the driver main
+    thread (see there)."""
+    from .sources.segment_format import register
+
+    register(spark)
+    (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars", "lang", "source")
+        .repartitionByRange(8, "doc_id")
+        .write.format("olapseg")
+        .option("path", path)
+        .mode("overwrite")
+        .save()
+    )
+    return path
+
+
+def _write_ivf_centroids(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """The IVF coarse-quantizer index (cent_id, cent_vec), trained once
+    per corpus by the deterministic sampled k-means
+    (operators/similarity.train_ivf_centroids) — the reference's A15
+    materialized-index idea applied to ANN serving: queries read the
+    index, training never runs inside a query plan.  Oracle-checkable
+    because training is deterministic: DuckDB re-derives bit-identical
+    centroids from the same corpus."""
+    from .operators.similarity import train_ivf_centroids
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _save(train_ivf_centroids(emb), path)
+
+
+def _write_pq_codebooks(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Per-subspace deterministic k-means codebooks of the PQ index."""
+    from .operators.similarity import train_pq_codebooks
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _save(train_pq_codebooks(emb), path)
+
+
+def _write_pq_codes(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Every corpus vector's m-byte PQ code row under the published
+    codebooks — the compressed representation a 100 TB deployment
+    scans INSTEAD of raw vectors."""
+    from .operators.similarity import pq_encode
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    codebooks = read_artifact(spark, sf_dir, "pq_codebooks")
+    return _save(pq_encode(emb, codebooks), path)
+
+
+def _write_int8_codes(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """int8 CODES table (vec_id, codes) — the publish-time half of the
+    scalar-quantization storage cut: the corpus is encoded once per
+    publish (operators/similarity.int8_quantize) and serving scans
+    4x-smaller integer codes, never the float vectors."""
+    from .operators.similarity import int8_quantize
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _save(int8_quantize(emb).select("vec_id", "codes"), path)
+
+
+def _write_ann_probes(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """The STANDARD PROBE SET (vec_id, embedding; the n lowest vec_ids
+    — similarity.standard_probes), eval-sized by contract, so the ANN
+    query router holds it driver-resident (artifact_rows) without a
+    distributed job."""
+    from .operators.similarity import standard_probes
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return _save(standard_probes(emb).coalesce(1), path)
+
+
+def _write_ann_truth_k10(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """EXACT brute-force cosine top-10 of the standard probe set
+    against the corpus — the ground truth every ANN recall evaluation
+    compares the served index against.  A constant of (corpus, probes,
+    k), so the evaluator READS k rows per probe instead of paying the
+    corpus scan and per-probe ranking on every run.  Oracle-checkable
+    because brute_topk is deterministic (rank ties broken by vec_id;
+    cosine rounded 6dp)."""
+    from .operators.similarity import ANN_EVAL_K, brute_topk, standard_probes
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    truth = brute_topk(emb, standard_probes(emb), k=ANN_EVAL_K)
+    return _save(truth.coalesce(1), path)  # k*probes rows: one file
+
+
+def _write_bpe_merges(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """The BPE merge table — the tokenizer artifact a training pipeline
+    versions alongside its corpus: trained once per publish
+    (operators/text.bpe_train, the deterministic 6-merge recipe);
+    encode queries load it driver-side and never retrain."""
+    from .operators.text import bpe_train
+
+    return _save(bpe_train(load_table(spark, sf_dir, "documents"), k=6), path)
+
+
+def _write_shingle_index(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Shingle index (doc_id, n, sz, sh, mh, ...) — the publish-time
+    materialization of the dedup family's tokenize/shingle/hash pass,
+    so serving-path dedup starts at the posting-list aggregate.
+
+    Four shingle widths (``n`` = 1, 2, 3, 5) and two hash columns live
+    in the one index: ``sh`` = xxhash64 drives n-gram Jaccard posting
+    lists AND the DSIR unigram+bigram feature space (widths 1/2),
+    ``mh`` = md5int % MINHASH_P is the minhash affine family's base
+    hash.  LIST-partitioned by ``n`` (one directory per width), so
+    every consumer's ``n == k`` filter is a partition PRUNE."""
+    from .operators.indexes import shingle_rows_from
+
+    docs = load_table(spark, sf_dir, "documents")
+    # Size index files to a ROW TARGET (~100k docs ≈ 4M gram rows
+    # ≈ tens of MB per file), not to the writer's input parallelism:
+    # inheriting the scan's partitioning wrote 32 ~100 KiB files per
+    # width at sf0.1, and every index consumer then scheduled 32
+    # near-empty tasks per scan.  The (n, doc-bucket) repartition keeps
+    # each width's files at the target size at ANY corpus scale.
+    files_per_width = max(1, docs.count() // 100_000)
+    shingle_rows_from(docs).repartition(
+        files_per_width,
+        F.col("n"),
+        F.pmod(F.xxhash64("doc_id"), F.lit(files_per_width)),
+    ).write.mode("overwrite").partitionBy("n").parquet(path)
+    return path
+
+
+def _write_minhash_sigs(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Minhash SIGNATURE table (doc_id, mh0..mh7) over the declared
+    parameter set (8 hashes, n=3 shingles) — one groupBy over the
+    shingle index at publish time, so the serving-path candidate query
+    is bands -> bucket self-join -> distinct.  Signatures are per-doc,
+    so a delta refresh signs only the delta rowsets and appends."""
+    from .operators.dedup import minhash_signatures_from_index
+
+    idx = (
+        read_artifact(spark, sf_dir, "shingle_index")
+        .filter(F.col("n") == _MINHASH_SIGS_N)
+        .select("doc_id", "mh")
+    )
+    sigs = minhash_signatures_from_index(
+        idx, num_hashes=_MINHASH_SIGS_NUM_HASHES
+    )
+    return _save(sigs, path)
+
+
+def _write_truth_pairs_n3(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """EXACT-Jaccard truth pair set (n=3 shingles, jaccard >= 0.4,
+    df <= 50): a constant of (corpus, n, threshold) — the ground truth
+    every LSH-parameter evaluation compares against — so the evaluator
+    READS the pair set instead of re-expanding the shingle
+    co-occurrence pairs on every run.  Oracle-checkable: DuckDB
+    re-derives the identical pair set from the same corpus."""
+    from .operators.dedup import ngram_pairs_from_index
+
+    idx3 = (
+        read_artifact(spark, sf_dir, "shingle_index")
+        .filter(F.col("n") == 3)
+        .select("doc_id", "sz", "sh")
+    )
+    pairs = ngram_pairs_from_index(idx3, threshold=0.4, max_doc_freq=50)
+    return _save(pairs.coalesce(1), path)  # sparse pairs: one file
+
+
+def _write_neardup_clusters(
+    spark: SparkSession, sf_dir: str, path: str
+) -> str:
+    """Near-dup CLUSTER TABLE (doc_id, cluster_id; cluster_id = lowest
+    member id, the elected canonical) — the publish-time resolution of
+    the banded-LSH candidate graph.  The cluster-serving queries READ
+    it instead of re-running the iterative connected-components closure
+    per query; new publishes delta-refresh it through
+    dedup.cluster_delta_refresh (refresh ≡ rebuild pinned in tests)."""
+    from .operators import dedup as dd
+
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
+    # band over the signature table's OWN build params — a raised
+    # _MINHASH_SIGS_NUM_HASHES must widen the banding here too, not
+    # silently cluster on half the signature
+    pairs = dd.minhash_candidates_from_sigs(
+        sigs, num_hashes=_MINHASH_SIGS_NUM_HASHES, band_rows=dd.MH_BAND_ROWS
+    )
+    clusters = dd.connected_components(pairs).select(
+        F.col("id").alias("doc_id"), F.col("component").alias("cluster_id")
+    )
+    return _save(clusters.coalesce(1), path)  # sparse clusters: one file
+
+
+def _write_simhash_fps(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Simhash FINGERPRINT table (doc_id, simhash): per-doc, so a
+    delta refresh fingerprints only the delta rowsets and appends."""
+    from .operators.dedup import simhash
+
+    docs = load_table(spark, sf_dir, "documents")
+    return _save(simhash(docs, bits=32), path)
+
+
+def _write_doc_stats(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Per-document CURATION-STATS table: every column is a pure
+    per-document function of the text (quality features + language ID
+    via operators/text.enrich — the SAME operator the inline pipeline
+    runs — plus the ws/BPE-ish token counts and the exact-dedup
+    sha256), with the text itself dropped: ~50 narrow bytes per doc.
+
+    The optimization-guide §8 "decide with small rows" shape: the
+    curation pipeline's decisions depend only on these scalars, so a
+    pipeline serving from this table scans the heavy text once, at
+    publish."""
+    from .operators.text import enrich, token_counts
+
+    docs = load_table(spark, sf_dir, "documents")
+    stats = token_counts(enrich(docs)).select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_chars",
+        "n_tokens",
+        "n_punct",
+        "n_stopwords",
+        "mean_token_len",
+        "quality",
+        "pred_lang",
+        "ws_tokens",
+        "bpe_tokens",
+        F.sha2(F.col("text"), 256).alias("text_sha"),
+    )
+    return _save(stats, path)
+
+
+def _write_nb_model(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """NB quality-model weights (bucket, weight; bucket=-1 is the
+    prior), trained once per corpus on the learnable token-presence
+    label by operators/text.naive_bayes_train_hashed — the
+    model-registry artifact the serving query broadcasts.
+    Oracle-checkable because training is closed-form and
+    exact-decimal."""
+    from .operators.text import naive_bayes_train_hashed
+
+    docs = load_table(spark, sf_dir, "documents").withColumn(
+        "__lbl",
+        F.when(
+            F.array_contains(F.split("text", " "), "spark"), "pos"
+        ).otherwise("neg"),
+    )
+    return _save(
+        naive_bayes_train_hashed(docs, label_col="__lbl", positive="pos"), path
+    )
+
+
+def _write_lineitem_year(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Ship-year-partitioned lineitem export (directory per ``l_year``)
+    — the fact-side layout for the dynamic-partition-pruning query: a
+    join keyed on the partition column lets Spark inject the dim
+    side's matching years as a runtime PartitionFilter."""
+    li = load_table(spark, sf_dir, "lineitem")
+    li.withColumn(
+        "l_year", F.year(F.col("l_shipdate").cast("date")).cast("int")
+    ).write.mode("overwrite").partitionBy("l_year").parquet(path)
+    return path
+
+
+def _write_lineitem_zorder(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Z-order-clustered lineitem copy (clustered on (l_partkey,
+    l_suppkey)) — the write-path layout transform; readers rely on
+    row-group stats for 2-D box pruning."""
+    from .operators.clustering import zorder_write
+
+    li = load_table(spark, sf_dir, "lineitem")
+    zorder_write(li, path, ["l_partkey", "l_suppkey"])
+    return path
+
+
+# The ingest_* artifacts: one-time exports of a source table to an
+# interchange format, so the ingest_* queries time the READ path, not
+# a first-call export write.
+
+
+def _write_ingest_jsonl(spark: SparkSession, sf_dir: str, path: str) -> str:
+    load_table(spark, sf_dir, "documents").write.mode("overwrite").json(path)
+    return path
+
+
+def _write_ingest_csv(spark: SparkSession, sf_dir: str, path: str) -> str:
+    load_table(spark, sf_dir, "orders").write.mode("overwrite").option(
+        "header", "true"
+    ).option("escape", '"').csv(path)
+    return path
+
+
+def _write_ingest_orc(spark: SparkSession, sf_dir: str, path: str) -> str:
+    load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag"
+    ).write.mode("overwrite").orc(path)
+    return path
+
+
+def _write_ingest_binary(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """Loose-file corpus for the binaryFile source: the first 64
+    documents' UTF-8 bytes, one file each, named by doc_id.  The
+    driver-side loop is fixture-build only (64 tiny files); real
+    corpora arrive as files already."""
+    os.makedirs(path, exist_ok=True)
+    rows = (
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") < 64)
+        .select("doc_id", "text")
+        .collect()
+    )
+    for r in rows:
+        fp = os.path.join(path, f"doc_{r['doc_id']:05d}.bin")
+        with open(fp, "wb") as fh:
+            fh.write(r["text"].encode("utf-8"))
+    return path
+
+
+def _write_ingest_olapseg(spark: SparkSession, sf_dir: str, path: str) -> str:
+    """One custom binary segment (sources/segment_format.py): the
+    documents table in the bespoke block format the olapseg DataSource
+    mounts with zone-map pushdown, encoded through the same
+    Arrow/numpy batch path the distributed writer uses.  Returns the
+    ``.oseg`` file."""
+    import pyarrow as pa
+
+    from .sources.segment_format import write_segment_batches
+
+    os.makedirs(path, exist_ok=True)
+    pdf = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", "n_chars", "lang", "source")
+        .toPandas()
+    )
+    seg = os.path.join(path, "documents.oseg")
+    write_segment_batches(
+        [pa.RecordBatch.from_pandas(pdf)], seg, block_rows=256
+    )
+    return seg
+
+
+def _bucketed(n: int, *pairs: tuple[str, str]):
+    """Build of a managed co-bucketed table pair: each (table, key)
+    written ``bucketBy(n, key)`` + sorted through the session catalog,
+    where the bucket spec IS visible to the planner, so an equi-join
+    on the keys is storage-partitioned — NEITHER side shuffles (zero
+    Exchange; pinned by tests/test_bucketed.py).  The engine's own __bk
+    FNV bucketing is invisible to Catalyst through a plain parquet
+    read.  Returns the qualified table names."""
+
+    def build(spark: SparkSession, sf_dir: str, loc: str) -> tuple[str, ...]:
+        base = os.path.basename(sf_dir.rstrip("/"))
+        db = "bkt_" + re.sub(r"[^0-9A-Za-z]", "_", base)
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{loc}'")
+        names = []
+        for table, key in pairs:
+            name = f"{db}.{table}_by_{key.split('_', 1)[1]}"
+            (
+                # repartition on the bucket key first: ONE sorted file
+                # per bucket, the invariant that lets the sorted-bucket-
+                # scan conf (session.py) elide SMJ sorts soundly
+                load_table(spark, sf_dir, table)
+                .repartition(n, key)
+                .write.bucketBy(n, key)
+                .sortBy(key)
+                .format("parquet")
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+            names.append(name)
+        return tuple(names)
+
+    return build
+
+
+def _catalog_lost(spark: SparkSession, names: tuple[str, ...]) -> bool:
+    # the bucket spec lives in the session catalog (files alone don't
+    # carry it); a new session must re-register even when the cache
+    # survived (tests share one process but may cycle sessions).  Check
+    # every name: a partial drop or interrupted registration must not
+    # be trusted.
+    return not all(spark.catalog.tableExists(n) for n in names)
+
+
+ARTIFACTS: dict[str, Artifact] = {
+    # the olapseg directory table; build_all writes it first, on the
+    # driver main thread
+    "segtbl_dir": Artifact(("documents",), _write_segtbl_dir),
+    "ivf_centroids": Artifact(("embeddings",), _write_ivf_centroids),
+    "ingest_jsonl": Artifact(("documents",), _write_ingest_jsonl),
+    "ingest_csv": Artifact(("orders",), _write_ingest_csv),
+    "ingest_orc": Artifact(("lineitem",), _write_ingest_orc),
+    "ingest_binary": Artifact(("documents",), _write_ingest_binary),
+    "ingest_olapseg": Artifact(("documents",), _write_ingest_olapseg),
+    # fact-dim: orders x customer on custkey
+    "bucketed_pair": Artifact(
+        ("orders", "customer"),
+        _bucketed(8, ("orders", "o_custkey"), ("customer", "c_custkey")),
+        directory="bucketed_db",
+        lost=_catalog_lost,
+    ),
+    # fact-fact: orders x lineitem on orderkey — at 100 TB both sides
+    # are huge and this is the workload's most expensive exchange
+    "bucketed_fact_pair": Artifact(
+        ("orders", "lineitem"),
+        _bucketed(16, ("orders", "o_orderkey"), ("lineitem", "l_orderkey")),
+        directory="bucketed_db",
+        lost=_catalog_lost,
+    ),
+    "lineitem_zorder": Artifact(("lineitem",), _write_lineitem_zorder),
+    "lineitem_year": Artifact(("lineitem",), _write_lineitem_year),
+    "int8_codes": Artifact(("embeddings",), _write_int8_codes),
+    "shingle_index": Artifact(("documents",), _write_shingle_index),
+    "minhash_sigs": Artifact(("documents",), _write_minhash_sigs),
+    "pq_codebooks": Artifact(("embeddings",), _write_pq_codebooks),
+    "pq_codes": Artifact(("embeddings",), _write_pq_codes),
+    "simhash_fps": Artifact(("documents",), _write_simhash_fps),
+    "doc_stats": Artifact(("documents",), _write_doc_stats),
+    "nb_model": Artifact(("documents",), _write_nb_model),
+    "truth_pairs_n3": Artifact(("documents",), _write_truth_pairs_n3),
+    "ann_truth_k10": Artifact(("embeddings",), _write_ann_truth_k10),
+    "ann_probes": Artifact(("embeddings",), _write_ann_probes),
+    "neardup_clusters": Artifact(("documents",), _write_neardup_clusters),
+    "bpe_merges": Artifact(("documents",), _write_bpe_merges),
+}

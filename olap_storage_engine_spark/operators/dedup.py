@@ -215,7 +215,7 @@ def minhash_signatures_from_index(
     idx: DataFrame, num_hashes: int = 8, id_col: str = "doc_id"
 ) -> DataFrame:
     """K min-hash values per document from the PERSISTED shingle index
-    (fixtures.shingle_index_path rows for one shingle width): the
+    (``shingle_index`` artifact rows for one shingle width): the
     index's ``mh`` column IS the affine family's base hash
     (md5int % MINHASH_P), so serving skips the tokenize/shingle/md5
     pass entirely and starts at the one groupBy(doc) with map-side
@@ -252,7 +252,7 @@ def minhash_candidates_from_sigs(
 ) -> DataFrame:
     """Banded-LSH candidate pairs from an ALREADY MATERIALIZED
     signature table (doc_id, mh0..mhK) — the serving path when
-    signatures persist at publish time (fixtures.minhash_sigs_path):
+    signatures persist at publish time (the ``minhash_sigs`` artifact):
     the query is bands -> bucket self-join -> distinct, nothing else."""
     return _banded_pairs(sigs, num_hashes, band_rows, id_col)
 
@@ -557,7 +557,7 @@ def ngram_pairs_from_index(
     """The pairing tail of ``ngram_jaccard_pairs`` over an ALREADY
     MATERIALIZED shingle index (doc_id, sz, sh) — the serving path
     when the index persists at publish time like doc_postings does
-    (fixtures.shingle_index_path): queries skip the tokenize/shingle/
+    (the ``shingle_index`` artifact): queries skip the tokenize/shingle/
     hash pass entirely and start at the posting-list aggregate, so
     repeated dedup runs over a stable corpus pay the expression cost
     once at index build, not per query."""
@@ -1378,9 +1378,9 @@ def decontaminate_from_index(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Serving-path decontamination: the corpus side reads the
-    PERSISTED shingle index (doc_id, n, sh — fixtures.
-    shingle_index_path, maintained by shingle_index_delta_refresh at
-    publish time) instead of re-tokenizing the corpus per query; only
+    PERSISTED shingle index (doc_id, n, sh — the ``shingle_index``
+    artifact, maintained by shingle_index_delta_refresh at publish
+    time) instead of re-tokenizing the corpus per query; only
     the tiny benchmark set is shingled inline.  Same keep-set as
     ``decontaminate`` by construction (identical n, identical
     xxhash64)."""

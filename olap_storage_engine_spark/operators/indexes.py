@@ -162,7 +162,7 @@ def shingle_rows_from(
 ) -> DataFrame:
     """Derive shingle-index rows (doc_id, n, sz, sh, mh, m, sh1) from
     a documents frame — the one tokenize/shingle/hash pass shared by
-    full builds (fixtures.shingle_index_path) and delta refreshes.
+    full builds (the ``shingle_index`` artifact) and delta refreshes.
     The default widths MUST match the fixture build's (a delta
     refresh with narrower widths silently starves every consumer of
     the missing widths — e.g. DSIR reads n<=2).

@@ -31,8 +31,8 @@ from .spread import spread
 
 
 # The k the recall evaluation is DEFINED at: the persisted exact
-# truth set (fixtures.ann_truth_path), the brute baseline query, and
-# the served IVF ranking all use this one constant, so a k change
+# truth set (the ``ann_truth_k10`` artifact), the brute baseline query,
+# and the served IVF ranking all use this one constant, so a k change
 # reaches every side of recall@k or none — recall normalizes by the
 # truth-side count, and a truth table built at a different k than the
 # serve silently skews the metric (r14 review; the MH_BAND_ROWS
@@ -43,7 +43,7 @@ ANN_EVAL_K = 10
 def standard_probes(emb: DataFrame, n: int = 5) -> DataFrame:
     """The fixture evaluation probe set: the n lowest vec_ids — ONE
     definition shared by the declared similarity queries and the
-    publish-time exact-truth builder (fixtures.ann_truth_path), so
+    publish-time exact-truth builder (the ``ann_truth_k10`` artifact), so
     the persisted truth set can never drift from the probes the
     queries serve (the band-key discipline applied to eval probes).
     Deliberately FIXED-SIZE: an eval set derived as a corpus fraction
@@ -552,8 +552,8 @@ def ivf_topk(
 
     - ``centroids`` — a persisted (cent_id, cent_vec) index table
       trained offline (``train_ivf_centroids`` at index-build time,
-      e.g. fixtures.ivf_centroids).  This is the production serving
-      path: the query plan only broadcasts the tiny index table —
+      e.g. the ``ivf_centroids`` artifact).  This is the production
+      serving path: the query plan only broadcasts the tiny index table —
       training cost is paid once per corpus publish, never per query.
     - ``trained=True`` without ``centroids`` — train inline (the
       deterministic sampled k-means).  Correct but entangles the
@@ -1138,7 +1138,7 @@ def int8_topk_from_codes(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Int8 top-k over the PERSISTED codes table — the serving path:
-    quantization happened at publish time (fixtures.int8_codes_path),
+    quantization happened at publish time (the ``int8_codes`` artifact),
     so a query scans int8 codes (4x less I/O than the float vectors)
     and never touches the embedding column at all.  Delta refresh =
     encode only new rowsets with the FROZEN published scale vector

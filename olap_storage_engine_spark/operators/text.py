@@ -1097,7 +1097,7 @@ def dsir_select_from_grams(
 ) -> DataFrame:
     """DSIR scoring over pre-materialized gram frames — the serving
     path when the (id, gram) rows come from the publish-time shingle
-    index (fixtures.shingle_index_path widths 1/2) instead of an
+    index (``shingle_index`` artifact widths 1/2) instead of an
     inline tokenize: the corpus is never re-tokenized at query time,
     only the index's posting rows are aggregated and joined.
 

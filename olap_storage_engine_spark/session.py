@@ -78,8 +78,9 @@ def get_spark(
         # sort-merge joins over co-bucketed tables skip their sorts
         # entirely (q21_bucketed: 4 fact-side sorts -> 0).  Sound ONLY
         # when every bucket holds exactly one sorted file — every
-        # bucketed writer in this engine (fixtures.bucketed_pair /
-        # bucketed_fact_pair, OlapTable.register_bucketed) enforces
+        # bucketed writer in this engine (the bucketed_pair and
+        # bucketed_fact_pair artifacts in fixtures.ARTIFACTS,
+        # OlapTable.register_bucketed) enforces
         # that by repartitioning on the bucket key before bucketBy+
         # sortBy, so a bucket is written by exactly one task.  Do NOT
         # register foreign bucketed tables with multi-file buckets in

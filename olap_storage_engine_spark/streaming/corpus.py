@@ -305,7 +305,7 @@ def run_fixture_stream_neardup_filter(
     each row's banded-MinHash signature is computed IN THE ROW (no
     shuffle, no state) and probed against per-band bucket MINIMA
     derived from the PERSISTED signature index
-    (fixtures.minhash_sigs_path) — a doc is reported as a near-dup iff
+    (the ``minhash_sigs`` artifact) — a doc is reported as a near-dup iff
     some band's bucket holds a LOWER doc_id, which is exactly "appears
     as doc_b in the batch banded-LSH candidate pairs", so the batch
     mh_pairs oracle checks the stream's dropped set EXACTLY.
@@ -327,7 +327,7 @@ def run_fixture_stream_neardup_filter(
     built from non-null bigints — so such docs match no bucket and
     are never reported, matching the batch semantics where a
     signature-less doc has no index row at all."""
-    from ..fixtures import minhash_sigs_path, minhash_sigs_build_params
+    from ..fixtures import minhash_sigs_build_params, read_artifact
     from ..functions.hashes import md5int
     from ..functions.textfns import tokens
     from ..operators.dedup import (
@@ -389,7 +389,7 @@ def run_fixture_stream_neardup_filter(
     # signature index, through the SAME banding topology the batch
     # self-join uses (dedup.banded_rows); cached so the stream's
     # micro-batches don't re-aggregate it
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     buckets = (
         banded_rows(sigs, num_hashes, band_rows)
         .groupBy("band", "sig")

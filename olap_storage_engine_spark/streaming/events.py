@@ -642,135 +642,6 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-USER_TOTALS_SCHEMA = (
-    "user_id long, n_events long, total_value double, "
-    "first_ts timestamp, last_ts timestamp"
-)
-
-
-class _UserTotalsProcessor:
-    """transformWithStateInPandas processor (the Spark 4 arbitrary-
-    stateful API, successor to applyInPandasWithState): per-user
-    lifetime totals kept in a typed ValueState, the refreshed totals
-    emitted on every batch that touches the user.
-
-    The downstream reader keeps each user's LAST emission (n_events is
-    strictly increasing, so max-by-n is the final state) — the
-    update-log-plus-latest pattern a streaming materialized view uses.
-    State is one fixed-width row per user: bounded by user cardinality,
-    not event volume; at ingest scale add a TTL via getValueState's
-    ttlDurationMs to evict dormant users."""
-
-    def init(self, handle):
-        self._state = handle.getValueState(
-            "totals",
-            "n long, total double, first_us long, last_us long",
-        )
-
-    def handleInputRows(self, key, rows, timer_values):
-        import pandas as pd
-
-        n, total, first_us, last_us = 0, 0.0, None, None
-        if self._state.exists():
-            n, total, first_us, last_us = self._state.get()
-        for pdf in rows:
-            ts_us = pdf["ts"].astype("int64") // 1000
-            lo, hi = int(ts_us.min()), int(ts_us.max())
-            first_us = lo if first_us is None else min(first_us, lo)
-            last_us = hi if last_us is None else max(last_us, hi)
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total, first_us, last_us))
-        (user_id,) = key
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [n],
-                "total_value": [total],
-                "first_ts": [pd.Timestamp(first_us, unit="us")],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
-
-    def close(self):
-        pass
-
-
-def run_fixture_stream_user_totals(
-    spark: SparkSession,
-    sf_dir: str,
-    cutoff: str = "2024-01-16 00:00:00",
-) -> DataFrame:
-    """Drive the transformWithStateInPandas processor over the
-    two-batch events stream and return each user's FINAL totals (the
-    last emission per user — n_events strictly increases, so one
-    max_by aggregate recovers it from the update log).  Oracle: the
-    plain batch aggregate over the same events.
-
-    CONTAINER LIMITATION: Spark's transformWithState Python runner
-    needs ``google.protobuf``, absent here (and installs are out of
-    scope), so this raises a clear error instead of a cryptic
-    worker crash; ``run_fixture_stream_sessionize``
-    (applyInPandasWithState) is the exercised custom-stateful path.
-    The processor/runner code is the real Spark-4 API shape and runs
-    wherever protobuf exists (tests/test_streaming.py gates on it)."""
-    import uuid
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise RuntimeError(
-            "transformWithStateInPandas requires google.protobuf "
-            "(Spark's streaming python runner dependency), not present "
-            "in this container — use applyInPandasWithState "
-            "(run_fixture_stream_sessionize) here"
-        ) from e
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # subclass dynamically so the module stays importable even if a
-    # future Spark renames the ABC — the methods are duck-typed
-    proc = type(
-        "UserTotalsProcessor", (StatefulProcessor,), dict(_UserTotalsProcessor.__dict__)
-    )()
-    stream = _two_batch_stream(spark, sf_dir, cutoff)
-    out = stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=USER_TOTALS_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-    name = f"utot_{uuid.uuid4().hex[:8]}"
-    with _shuffle_partitions(spark, 4):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _ephemeral_checkpoint())
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_or_raise(q)
-    log = spark.table(name)
-    final = (
-        log.groupBy("user_id")
-        .agg(
-            F.max_by(
-                F.struct("n_events", "total_value", "first_ts", "last_ts"),
-                F.col("n_events"),
-            ).alias("s")
-        )
-        .select(
-            "user_id",
-            F.col("s.n_events").alias("n_events"),
-            F.round("s.total_value", 4).alias("total_value"),
-            F.col("s.first_ts").alias("first_ts"),
-            F.col("s.last_ts").alias("last_ts"),
-        )
-    )
-    return final
-
-
 def run_fixture_stream_enrich(
     spark: SparkSession,
     sf_dir: str,

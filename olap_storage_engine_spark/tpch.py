@@ -259,10 +259,10 @@ def q_tpch_q7_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's plan shape, this one is the 100 TB serving layout
     (the r12 verdict's lever for the q7 driver flag);
     tests/test_bucketed.py pins the exchange count."""
-    from .fixtures import bucketed_fact_pair
+    from .fixtures import artifact_path
 
     n1, n2 = "NATION_1", "NATION_2"
-    o_name, li_name = bucketed_fact_pair(spark, sf_dir)
+    o_name, li_name = artifact_path(spark, sf_dir, "bucketed_fact_pair")
     li = spark.table(li_name).filter(
         (F.col("l_shipdate") >= F.lit("1995-01-01"))
         & (F.col("l_shipdate") < F.lit("1997-01-01"))
@@ -689,10 +689,10 @@ def q_tpch_q21_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffled passes over lineitem).  Same result and oracle as
     tpch_q21; tests/test_bucketed.py pins the fact-side exchange
     count."""
-    from .fixtures import bucketed_fact_pair
+    from .fixtures import artifact_path
     from .sources.testdata import load_table
 
-    o_name, li_name = bucketed_fact_pair(spark, sf_dir)
+    o_name, li_name = artifact_path(spark, sf_dir, "bucketed_fact_pair")
     o = spark.table(o_name).filter(F.col("o_orderstatus") == "F")
     li = spark.table(li_name)
     s = load_table(spark, sf_dir, "supplier")

@@ -1,4 +1,5 @@
-"""Storage-partitioned (bucket-aware) join — fixtures.bucketed_pair.
+"""Storage-partitioned (bucket-aware) join — the ``bucketed_pair``
+artifact (fixtures.ARTIFACTS).
 
 The 100 TB claim under test: two tables co-bucketed on the join key
 join with ZERO exchanges (no shuffle on either side), and a downstream
@@ -7,14 +8,14 @@ aggregate keyed on the same column reuses the bucket partitioning.
 
 from pyspark.sql import functions as F
 
-from olap_storage_engine_spark.fixtures import bucketed_pair
+from olap_storage_engine_spark.fixtures import artifact_path
 from olap_storage_engine_spark.plans.explain import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
 def _bucketed_join_df(spark):
-    o_name, c_name = bucketed_pair(spark, SF)
+    o_name, c_name = artifact_path(spark, SF, "bucketed_pair")
     o = spark.table(o_name)
     c = spark.table(c_name)
     return (

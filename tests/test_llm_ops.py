@@ -451,11 +451,13 @@ def test_standard_probe_rows_match_dataframe_definition(spark):
     """The pyarrow-read probe artifact and the DataFrame definition
     (similarity.standard_probes) cannot share code — this pin IS the
     shared definition: same ids, same vectors, same order."""
-    from olap_storage_engine_spark.fixtures import standard_probe_rows
+    from olap_storage_engine_spark.fixtures import artifact_rows
     from olap_storage_engine_spark.sources.testdata import load_table
 
     sf_dir = "/root/testdata/sf0.001"
-    got = standard_probe_rows(spark, sf_dir)
+    got = sorted(
+        artifact_rows(spark, sf_dir, "ann_probes", ("vec_id", "embedding"))
+    )
     want = sorted(
         (r["vec_id"], list(r["embedding"]))
         for r in sim.standard_probes(
@@ -705,7 +707,7 @@ def test_pq_recall_vs_exact_topk(spark):
     would give, and monotone in the candidate budget."""
     from pyspark.sql import functions as F
 
-    from olap_storage_engine_spark.fixtures import pq_index_paths
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.similarity import (
         brute_topk,
         pq_topk,
@@ -722,11 +724,10 @@ def test_pq_recall_vs_exact_topk(spark):
             F.col("embedding").alias("probe_vec"),
         )
     )
-    cb_path, codes_path = pq_index_paths(spark, sf)
     approx = pq_topk(
         probes,
-        spark.read.parquet(codes_path),
-        spark.read.parquet(cb_path),
+        read_artifact(spark, sf, "pq_codes"),
+        read_artifact(spark, sf, "pq_codebooks"),
         emb,
         k=10,
         n_candidates=50,
@@ -738,8 +739,8 @@ def test_pq_recall_vs_exact_topk(spark):
     assert recall >= 0.4, recall
     wider = pq_topk(
         probes,
-        spark.read.parquet(codes_path),
-        spark.read.parquet(cb_path),
+        read_artifact(spark, sf, "pq_codes"),
+        read_artifact(spark, sf, "pq_codebooks"),
         emb,
         k=10,
         n_candidates=150,
@@ -753,7 +754,7 @@ def test_pq_recall_vs_exact_topk(spark):
 def test_ngram_indexed_equals_inline(spark):
     """The persisted-shingle-index serving path returns exactly the
     inline path's pairs."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.dedup import (
         ngram_jaccard_pairs,
         ngram_pairs_from_index,
@@ -765,7 +766,7 @@ def test_ngram_indexed_equals_inline(spark):
         load_table(spark, sf, "documents"), n=5, threshold=0.5, max_doc_freq=50
     )
     indexed = ngram_pairs_from_index(
-        spark.read.parquet(shingle_index_path(spark, sf))
+        read_artifact(spark, sf, "shingle_index")
         .filter(F.col("n") == 5)
         .select("doc_id", "sz", "sh"),
         threshold=0.5,
@@ -780,7 +781,7 @@ def test_minhash_indexed_equals_inline(spark):
     """MinHash banded LSH served from the persisted shingle index
     returns exactly the inline path's candidate pairs (same n=3
     shingles, same md5-based affine family)."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.dedup import (
         minhash_candidates,
         minhash_candidates_from_index,
@@ -792,7 +793,7 @@ def test_minhash_indexed_equals_inline(spark):
         load_table(spark, sf, "documents"), num_hashes=8, band_rows=2, n=3
     )
     indexed = minhash_candidates_from_index(
-        spark.read.parquet(shingle_index_path(spark, sf))
+        read_artifact(spark, sf, "shingle_index")
         .filter(F.col("n") == 3)
         .select("doc_id", "mh"),
         num_hashes=8,
@@ -802,12 +803,11 @@ def test_minhash_indexed_equals_inline(spark):
     b = sorted((r["doc_a"], r["doc_b"]) for r in indexed.collect())
     assert a == b and len(a) > 0
     # the persisted SIGNATURE table (second index layer) agrees too
-    from olap_storage_engine_spark.fixtures import minhash_sigs_path
     from olap_storage_engine_spark.operators.dedup import (
         minhash_candidates_from_sigs,
     )
 
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf))
+    sigs = read_artifact(spark, sf, "minhash_sigs")
     c = sorted(
         (r["doc_a"], r["doc_b"])
         for r in minhash_candidates_from_sigs(sigs, 8, 2).collect()
@@ -819,19 +819,16 @@ def test_minhash_verified_drops_false_positives(spark):
     """Verification semantics: every verified pair is an LSH candidate
     with true Jaccard >= threshold; no candidate below threshold
     survives."""
-    from olap_storage_engine_spark.fixtures import (
-        minhash_sigs_path,
-        shingle_index_path,
-    )
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.dedup import (
         minhash_candidates_from_sigs,
         minhash_verified_pairs,
     )
 
     sf = "/root/testdata/sf0.001"
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf))
+    sigs = read_artifact(spark, sf, "minhash_sigs")
     idx3 = (
-        spark.read.parquet(shingle_index_path(spark, sf))
+        read_artifact(spark, sf, "shingle_index")
         .filter(F.col("n") == 3)
         .select("doc_id", "sz", "sh")
     )
@@ -1596,7 +1593,7 @@ def test_dsir_index_served_equals_inline(spark):
     gram identity (n, sh)) returns exactly the inline tokenize path's
     top-k — counts in hashed-gram space equal counts in string-gram
     space, so scores and ranks agree row for row."""
-    from olap_storage_engine_spark.fixtures import shingle_index_path
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.text import (
         dsir_select,
         dsir_select_from_grams,
@@ -1607,7 +1604,7 @@ def test_dsir_index_served_equals_inline(spark):
     docs = load_table(spark, sf, "documents")
     tgt = docs.filter(F.col("doc_id") % 97 == 0)
     inline = dsir_select(docs, tgt, k=50)
-    idx = spark.read.parquet(shingle_index_path(spark, sf))
+    idx = read_artifact(spark, sf, "shingle_index")
     raw_g = idx.filter(F.col("n") <= 2).select("doc_id", "n", "sh")
     served = dsir_select_from_grams(
         raw_g,

@@ -593,7 +593,7 @@ def test_nb_confusion_keeps_unseen_bucket_docs(spark):
 def test_nb_serve_from_persisted_model_matches_inline(spark):
     """The persisted-model serving path must predict identically to
     inline train+predict (train-once / serve-many parity)."""
-    from olap_storage_engine_spark.fixtures import nb_model_path
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.sources.testdata import load_table
 
     sf = "/root/testdata/sf0.001"
@@ -601,7 +601,7 @@ def test_nb_serve_from_persisted_model_matches_inline(spark):
     served = {
         r["doc_id"]: r["pred"]
         for r in tx.nb_predict(
-            docs, spark.read.parquet(nb_model_path(spark, sf))
+            docs, read_artifact(spark, sf, "nb_model")
         ).collect()
     }
     labeled = docs.withColumn(

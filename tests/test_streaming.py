@@ -169,51 +169,6 @@ def test_stream_replay_dedup_idempotent(spark):
     assert n_events_total == ev.count()
 
 
-def test_user_totals_transform_with_state(spark):
-    """The Spark-4 transformWithStateInPandas path: runs end-to-end
-    where its protobuf runner dependency exists; in this container it
-    must fail with the documented clear error, not a worker crash."""
-    import pytest
-
-    from olap_storage_engine_spark.streaming.events import (
-        run_fixture_stream_user_totals,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-
-        has_protobuf = True
-    except ImportError:
-        has_protobuf = False
-
-    if not has_protobuf:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            run_fixture_stream_user_totals(spark, "/root/testdata/sf0.001")
-        return
-
-    from pyspark.sql import functions as F
-
-    from olap_storage_engine_spark.sources.testdata import load_table
-
-    got = {
-        r["user_id"]: (r["n_events"], r["total_value"])
-        for r in run_fixture_stream_user_totals(
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    want = {
-        r["user_id"]: (r["n"], r["t"])
-        for r in load_table(spark, "/root/testdata/sf0.001", "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 4).alias("t"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_stream_corpus_filter_matches_batch(spark):
     """The streaming verdict histogram must equal the batch policy's
     aggregate — same operator, two execution modes."""
@@ -291,7 +246,7 @@ def test_stream_neardup_filter_matches_batch(spark):
     signature index — same signatures, same banding, two execution
     modes.  Sanity: nothing below the corpus minimum id is ever
     dropped, and at least one dup exists in the fixture."""
-    from olap_storage_engine_spark.fixtures import minhash_sigs_path
+    from olap_storage_engine_spark.fixtures import read_artifact
     from olap_storage_engine_spark.operators.dedup import (
         minhash_candidates_from_sigs,
     )
@@ -304,7 +259,7 @@ def test_stream_neardup_filter_matches_batch(spark):
         r["doc_id"]
         for r in run_fixture_stream_neardup_filter(spark, sf_dir).collect()
     )
-    sigs = spark.read.parquet(minhash_sigs_path(spark, sf_dir))
+    sigs = read_artifact(spark, sf_dir, "minhash_sigs")
     want = sorted(
         r["doc_b"]
         for r in minhash_candidates_from_sigs(sigs, 8, 2)
